@@ -7,13 +7,27 @@ evaluator implemented expensively. The Spark-idiomatic equivalent compiles
 the expression **once** into a Catalyst column tree that runs inside
 whole-stage codegen; there is no per-row interpretation anywhere.
 
-Value model: every subexpression compiles to a Column of the TERM struct
-(:data:`sopspark.terms.TERM_TYPE`). Booleans are ``xsd:boolean`` literal
-terms; evaluation *errors* are NULL terms — which makes SPARQL's
-error-propagation semantics (and the reference's drop-on-error,
-``src/filter.rs:36``, ``src/map.rs:47-52``) fall out of Spark's NULL
-propagation for free, including the README's
+Value model: every subexpression compiles to a :class:`Term` record of the
+four TERM-struct components (``kind``, ``value``, ``dt``, ``lang``; see
+:data:`sopspark.terms.TERM_TYPE`), each a Column or — when known at compile
+time — a Python constant. ``lang(?o)`` is always a plain literal, so a
+string test on it folds to its one ``value`` Column; ``str``/``lcase``
+chains likewise carry a single growing ``value`` beside constant
+``kind``/``dt``/``lang``. A NULL ``value`` is the single error/unbound
+marker, which makes SPARQL's error-propagation semantics (and the
+reference's drop-on-error, ``src/filter.rs:36``, ``src/map.rs:47-52``) fall
+out of Spark's NULL propagation, including the README's
 ``coalesce(langMatches(lang(?o), "en"), true)`` idiom (``README.md:59-63``).
+Variables enter as field reads of their TERM-struct columns, and the struct
+is built once, at :func:`compile_expr`'s output (NULL on error).
+
+Why records: a Column tree is a tree, not a DAG, so a helper that reads a
+whole TERM struct k times copies the argument's subtree k times, and every
+nesting level would multiply the Catalyst plan. Reading components copies
+only the component a test needs — usually a constant or a field read — so
+the plan grows linearly with the expression. The exception is arithmetic
+on operands whose datatype is known only per row: its result is formatted
+both as xsd:integer and as xsd:double, so such nesting doubles per level.
 
 Functions implemented = the surface the reference evidences
 (``README.md:61,129,224``: coalesce, langMatches, lang, iri, lcase, str, =)
@@ -28,9 +42,11 @@ identity behavior.
 from __future__ import annotations
 
 import datetime as _dt
+import operator
 import os
 import re
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -39,6 +55,7 @@ from sopspark.terms import (
     BNODE,
     IRI,
     LITERAL,
+    QUOTED,
     RDF_DIRLANGSTRING,
     RDF_LANGSTRING,
     TERM_SQL_TYPE,
@@ -89,119 +106,269 @@ def contains_aggregate(n: "Node") -> bool:
 
 
 # ---------------------------------------------------------------------------
-# term-column helpers
+# term records
 # ---------------------------------------------------------------------------
+# A component is a Column or, when known at compile time, a Python constant
+# (None = SQL NULL). The helpers below fold constants with SQL's
+# three-valued logic, so a test on a known component costs no Column at all.
+
+
+@dataclass(frozen=True, eq=False)
+class Term:
+    """One compiled SPARQL term: the four TERM-struct components.
+
+    A NULL ``value`` is the error/unbound marker; the other components are
+    meaningless on such rows. ``src`` is set when the components are field
+    reads of one TERM-struct Column (a variable): they are then NULL
+    together, and :meth:`col` hands the struct back unchanged."""
+
+    kind: Column | int | None
+    value: Column | str | None
+    dt: Column | str | None = None
+    lang: Column | str | None = None
+    src: Column | None = None
+
+    @staticmethod
+    def read(c: Column) -> "Term":
+        return Term(c["kind"], c["value"], c["dt"], c["lang"], src=c)
+
+    def col(self) -> Column:
+        """The TERM struct, NULL on error — built once, at the output."""
+        if self.src is not None:
+            return self.src
+        if self.value is None:
+            return _null_term()
+        t = F.struct(
+            _lit(self.kind, "tinyint").alias("kind"),
+            _lit(self.value).alias("value"),
+            _lit(self.dt).alias("dt"),
+            _lit(self.lang).alias("lang"),
+        )
+        return F.when(_lit(self.value).isNotNull(), t).otherwise(_null_term())
+
+
+ERROR = Term(None, None)  # unbound variable / evaluation error
+
 
 def _null_term() -> Column:
     return F.lit(None).cast(TERM_SQL_TYPE)
 
 
-def _mk_literal(value: Column, dt: Column | None = None, lang: Column | None = None) -> Column:
-    t = F.struct(
-        F.lit(LITERAL).cast("tinyint").alias("kind"),
-        value.alias("value"),
-        (dt if dt is not None else F.lit(None).cast("string")).alias("dt"),
-        (lang if lang is not None else F.lit(None).cast("string")).alias("lang"),
+def _lit(x, typ: str = "string") -> Column:
+    return x if isinstance(x, Column) else F.lit(x).cast(typ)
+
+
+def _bool(x) -> Column:
+    return _lit(x, "boolean")
+
+
+def _null(x):
+    return x.isNull() if isinstance(x, Column) else x is None
+
+
+def _eq(x, y):
+    if isinstance(x, Column):
+        return x == y
+    if isinstance(y, Column):
+        return y == x
+    return None if x is None or y is None else x == y
+
+
+def _in(x, vals):
+    if len(vals) == 1:
+        return _eq(x, vals[0])
+    if isinstance(x, Column):
+        return x.isin(*vals)
+    return None if x is None else x in vals
+
+
+def _eq_null_safe(x, y):
+    if isinstance(x, Column) or isinstance(y, Column):
+        return _lit(x).eqNullSafe(_lit(y))
+    return x == y
+
+
+def _not(x):
+    if isinstance(x, Column):
+        return ~x
+    return None if x is None else not x
+
+
+def _kleene(op, unit: bool, xs):
+    """Kleene AND (``unit`` True) / OR (``unit`` False); constant operands
+    fold away."""
+    cols, unknown = [], False
+    for x in xs:
+        if x is (not unit):
+            return not unit
+        if x is None:
+            unknown = True
+        elif x is not unit:
+            cols.append(x)
+    if not cols:
+        return None if unknown else unit
+    if unknown:
+        cols.append(F.lit(None).cast("boolean"))
+    return reduce(op, cols)
+
+
+def _and(*xs):
+    return _kleene(operator.and_, True, xs)
+
+
+def _or(*xs):
+    return _kleene(operator.or_, False, xs)
+
+
+def _case(branches, default=None, typ: str = "string"):
+    """``CASE WHEN c THEN v ... ELSE default END``: branches whose condition
+    is a known false/NULL are dropped, a known-true one ends the chain."""
+    out = None
+    for cond, val in branches:
+        if cond is False or cond is None:
+            continue
+        if cond is True:
+            default = val
+            break
+        out = F.when(cond, _lit(val, typ)) if out is None else out.when(cond, _lit(val, typ))
+    if out is None:
+        return default
+    return out if default is None else out.otherwise(_lit(default, typ))
+
+
+def _when(cond, a, b=None, typ: str = "string"):
+    return _case([(cond, a)], b, typ)
+
+
+def _err(t: Term):
+    """t is an error (the TERM struct is NULL)."""
+    return t.src.isNull() if t.src is not None else _null(t.value)
+
+
+def _ok(t: Term):
+    return _not(_err(t))
+
+
+def _strict(t: Term, b):
+    """``b``, but NULL where ``t`` is an error — what a test on the
+    components of a NULL TERM struct gives. Field reads need no guard."""
+    return b if t.src is not None else _when(_ok(t), b, typ="boolean")
+
+
+def _kind_is(t: Term, *kinds: int):
+    return _strict(t, _in(t.kind, kinds))
+
+
+def _literal(value, dt=None, lang=None) -> Term:
+    return Term(LITERAL, value, dt, lang)
+
+
+def bool_term(b) -> Term:
+    """boolean → xsd:boolean literal (NULL passes through = error)."""
+    if isinstance(b, Column):
+        v = b.cast("string")  # "true"/"false", NULL stays NULL
+    else:
+        v = None if b is None else ("true" if b else "false")
+    return _literal(v, XSD + "boolean")
+
+
+def _num_term(c: Column, integer=False) -> Term:
+    """numeric Column → typed literal. ``integer`` (a bool, or a Column
+    deciding per row) picks xsd:integer with an integral lexical form over
+    xsd:double."""
+    return _literal(
+        _when(integer, c.cast("long").cast("string"), c.cast("string")),
+        _when(integer, XSD + "integer", XSD + "double"),
     )
-    # NULL lexical value = upstream evaluation error → whole term is an error
-    return F.when(value.isNotNull(), t).otherwise(_null_term())
 
 
-def _mk_iri(value: Column) -> Column:
-    t = F.struct(
-        F.lit(IRI).cast("tinyint").alias("kind"),
-        value.alias("value"),
-        F.lit(None).cast("string").alias("dt"),
-        F.lit(None).cast("string").alias("lang"),
-    )
-    return F.when(value.isNotNull(), t).otherwise(_null_term())
+def _is_numeric(t: Term):
+    return _and(_eq(t.kind, LITERAL), _in(t.dt, NUMERIC_DTS))
 
 
-def bool_term(b: Column) -> Column:
-    """boolean Column → xsd:boolean literal term (NULL passes through = error)."""
-    return F.when(
-        b.isNotNull(),
-        _mk_literal(F.when(b, "true").otherwise("false"), F.lit(XSD + "boolean")),
-    ).otherwise(_null_term())
-
-
-def is_numeric_term(t: Column) -> Column:
-    return t.isNotNull() & (t["kind"] == LITERAL) & t["dt"].isin(NUMERIC_DTS)
-
-
-def num(t: Column) -> Column:
+def num(t: Term) -> Column:
     """numeric value of a term, NULL when not a recognized numeric literal."""
     # try_cast: an invalid lexical form for the claimed numeric datatype is
     # a type ERROR (NULL), not a job-killing exception (ANSI cast throws)
-    return F.when(is_numeric_term(t), t["value"].try_cast("double")).otherwise(F.lit(None).cast("double"))
+    return _lit(_when(_is_numeric(t), _lit(t.value).try_cast("double"), typ="double"), "double")
 
 
-def ebv(t: Column) -> Column:
+def ebv(t: Term) -> Column:
     """SPARQL effective boolean value; NULL = type error. §17.2.2 rule 1:
     a boolean/numeric literal whose lexical form is INVALID for its
     datatype has EBV *false* (not error) — the NULL from a failed cast
     must therefore coalesce to false on the numeric/boolean branches."""
-    is_bool = (t["kind"] == LITERAL) & (t["dt"] == XSD + "boolean")
-    is_str = (t["kind"] == LITERAL) & t["dt"].isNull() & t["lang"].isNull()
-    return (
-        F.when(t.isNull(), F.lit(None).cast("boolean"))
-        .when(is_bool, t["value"] == "true")
-        .when(
-            is_numeric_term(t),
-            F.coalesce(t["value"].try_cast("double") != 0.0, F.lit(False)),
+    is_lit = _eq(t.kind, LITERAL)
+    is_num = _is_numeric(t)
+    v = _lit(t.value)
+    # only the numeric branch turns a NULL value into a non-NULL answer
+    err = _err(t) if isinstance(is_num, Column) or is_num is True else False
+    return _bool(
+        _case(
+            [
+                (err, None),
+                (_and(is_lit, _eq(t.dt, XSD + "boolean")), v == "true"),
+                (is_num, F.coalesce(v.try_cast("double") != 0.0, F.lit(False))),
+                (_and(is_lit, _null(t.dt), _null(t.lang)), F.length(v) > 0),
+            ],
+            typ="boolean",
         )
-        .when(is_str, F.length(t["value"]) > 0)
-        .otherwise(F.lit(None).cast("boolean"))
     )
 
 
-def _plain_string(t: Column) -> Column:
+def _plain_string(t: Term):
     """string value when term is a string literal (plain or lang-tagged)."""
-    return F.when((t["kind"] == LITERAL) & t["dt"].isNull(), t["value"]).otherwise(
-        F.lit(None).cast("string")
+    return _when(_and(_eq(t.kind, LITERAL), _null(t.dt)), t.value)
+
+
+def _str_col(t: Term) -> Column:
+    return _lit(_plain_string(t))
+
+
+def _same_term(a: Term, b: Term):
+    return _and(
+        _eq(a.kind, b.kind),
+        _eq(a.value, b.value),
+        _eq_null_safe(a.dt, b.dt),
+        _eq_null_safe(a.lang, b.lang),
     )
 
 
-def term_eq(a: Column, b: Column, recognize_datatypes: bool = True) -> Column:
+def term_eq(a: Term, b: Term, recognize_datatypes: bool = True) -> Column:
     """SPARQL ``=``: numeric value-space comparison when both sides are
     recognized numerics (``src/query.rs:50-51`` semantics under ``-d``),
     term identity otherwise."""
-    both_num = is_numeric_term(a) & is_numeric_term(b)
-    ident = (
-        (a["kind"] == b["kind"])
-        & (a["value"] == b["value"])
-        & (a["dt"].eqNullSafe(b["dt"]))
-        & (a["lang"].eqNullSafe(b["lang"]))
-    )
-    base = F.when(a.isNull() | b.isNull(), F.lit(None).cast("boolean"))
+    branches = [(_or(_err(a), _err(b)), None)]
     if recognize_datatypes:
         at, bt = _datetime_value(a), _datetime_value(b)
-        return (
-            base.when(both_num, num(a) == num(b))
+        branches += [
+            (_and(_is_numeric(a), _is_numeric(b)), num(a) == num(b)),
             # op:dateTime-equal: value-space (timepoint) equality — two
             # lexically different zoned forms of one instant are equal
-            .when(at.isNotNull() & bt.isNotNull(), at == bt)
-            .otherwise(ident)
-        )
-    return base.otherwise(ident)
+            (at.isNotNull() & bt.isNotNull(), at == bt),
+        ]
+    return _bool(_case(branches, _same_term(a, b), typ="boolean"))
 
 
-def _datetime_value(t: Column) -> Column:
+def _dt_lexical(t: Term) -> Column:
+    """lexical form of an xsd:dateTime literal, NULL for anything else."""
+    return _lit(_when(_and(_eq(t.kind, LITERAL), _eq(t.dt, XSD + "dateTime")), t.value))
+
+
+def _datetime_value(t: Term) -> Column:
     """timestamp value when the term is an xsd:dateTime literal (NULL
     otherwise, incl. malformed lexical forms)."""
     # try_to_timestamp: a malformed lexical form is a type error (NULL),
     # not an ANSI-mode parse exception
-    return F.try_to_timestamp(
-        F.when((t["kind"] == LITERAL) & (t["dt"] == XSD + "dateTime"), t["value"])
-    )
+    return F.try_to_timestamp(_dt_lexical(t))
 
 
-def term_cmp(a: Column, b: Column, op: str) -> Column:
+def term_cmp(a: Term, b: Term, op: str) -> Column:
     """``< > <= >=``: numeric when both numeric, codepoint-string when both
     plain strings, op:dateTime-* timepoint comparison when both
     xsd:dateTime, else error (NULL)."""
     an, bn = num(a), num(b)
-    as_, bs = _plain_string(a), _plain_string(b)
+    as_, bs = _str_col(a), _str_col(b)
     at, bt = _datetime_value(a), _datetime_value(b)
 
     def apply(x: Column, y: Column) -> Column:
@@ -225,29 +392,12 @@ class Node:
     args: tuple
 
     def col(self, env: dict[str, Column], rd: bool = True) -> Column:
-        return _compile(self, env, rd)
+        return _compile(self, env, rd).col()
 
 
-def _num_term(c: Column, integer: bool = False, int_cond: Column | None = None) -> Column:
-    """numeric Column → typed literal term. ``int_cond`` switches the
-    datatype/format per row WITHOUT duplicating ``c``'s whole subtree on
-    both branches (Column trees are trees, not DAGs — branching the term
-    would double the codegen size; branching only dt/value keeps one copy)."""
-    if int_cond is not None:
-        dt = F.when(int_cond, F.lit(XSD + "integer")).otherwise(F.lit(XSD + "double"))
-        v = F.when(int_cond, c.cast("long").cast("string")).otherwise(c.cast("string"))
-        return F.when(c.isNotNull(), _mk_literal(v, dt)).otherwise(_null_term())
-    dt_s = XSD + ("integer" if integer else "double")
-    v = F.when(
-        c.isNotNull(),
-        c.cast("long").cast("string") if integer else c.cast("string"),
-    )
-    return F.when(c.isNotNull(), _mk_literal(v, F.lit(dt_s))).otherwise(_null_term())
-
-
-# nodes whose value is always boolean — compiled natively to boolean Columns
-# (avoids the exponential blowup of ebv(bool_term(...)) re-expansion: Column
-# trees are trees, not DAGs, so every reference duplicates its subtree)
+# nodes whose value is always boolean — compiled natively to boolean Columns:
+# no xsd:boolean string round trip, and a filter of field tests stays a bare
+# conjunction that parquet nested-field pushdown can translate
 _BOOL_OPS = {"or", "and", "not", "=", "!=", "<", ">", "<=", ">=", "bool_const"}
 _BOOL_CALLS = {
     "langmatches", "contains", "strstarts", "strends", "regex",
@@ -314,7 +464,7 @@ def _compile_bool(n: Node, env: dict[str, Column], rd: bool) -> Column:
             # the predicate a plain conjunction that parquet nested-field
             # pushdown can translate (row-group skipping on p.value etc.)
             if kind == IRI:
-                eq = (t["kind"] == IRI) & (t["value"] == value)
+                eq = _strict(t, _and(_eq(t.kind, IRI), _eq(t.value, value)))
             elif dt in NUMERIC_DTS and rd:
                 eq = num(t) == float(value)
             elif dt == XSD + "dateTime" and rd:
@@ -323,12 +473,16 @@ def _compile_bool(n: Node, env: dict[str, Column], rd: bool) -> Column:
                 eq = _datetime_value(t) == F.try_to_timestamp(F.lit(value))
             else:
                 d = None if dt == XSD_STRING else dt
-                eq = (
-                    (t["kind"] == LITERAL)
-                    & (t["value"] == value)
-                    & t["dt"].eqNullSafe(F.lit(d))
-                    & t["lang"].eqNullSafe(F.lit(lang))
+                eq = _strict(
+                    t,
+                    _and(
+                        _eq(t.kind, LITERAL),
+                        _eq(t.value, value),
+                        _eq_null_safe(t.dt, d),
+                        _eq_null_safe(t.lang, lang),
+                    ),
                 )
+            eq = _bool(eq)
             return eq if op == "=" else ~eq
         eq = term_eq(_compile(a[0], env, rd), _compile(a[1], env, rd), recognize_datatypes=rd)
         return eq if op == "=" else ~eq
@@ -348,16 +502,15 @@ def _compile_bool(n: Node, env: dict[str, Column], rd: bool) -> Column:
                 _compile_bool(a[1][2], env, rd)
             )
         if name in _BOOL_CALLS:
-            col = _call(a[0], [_compile(x, env, rd) for x in a[1]], rd)
-            return ebv(col)
+            return _bool(_bool_call(name, [_compile(x, env, rd) for x in a[1]]))
     return ebv(_compile(n, env, rd))
 
 
-def _compile(n: Node, env: dict[str, Column], rd: bool) -> Column:
+def _compile(n: Node, env: dict[str, Column], rd: bool) -> Term:
     op = n.op
     a = n.args
 
-    def c(i: int) -> Column:
+    def c(i: int) -> Term:
         return _compile(a[i], env, rd)
 
     # boolean-valued nodes: compile natively, wrap once
@@ -367,24 +520,21 @@ def _compile(n: Node, env: dict[str, Column], rd: bool) -> Column:
     if op == "var":
         name = a[0]
         if name not in env:
-            return _null_term()  # unbound variable → error/unbound
-        return env[name]
+            return ERROR  # unbound variable → error/unbound
+        return Term.read(env[name])
     if op == "iri_const":
-        return _mk_iri(F.lit(a[0]))
+        return Term(IRI, a[0])
     if op == "lit_const":
         value, dt, lang = a
-        if dt == XSD_STRING:
-            dt = None
-        return _mk_literal(F.lit(value), F.lit(dt) if dt else None, F.lit(lang) if lang else None)
+        return _literal(value, None if dt == XSD_STRING else dt or None, lang or None)
     if op == "num_const":
-        text, dt = a
-        return _mk_literal(F.lit(text), F.lit(dt))
+        return _literal(*a)
     if op == "bool_const":
-        return _mk_literal(F.lit("true" if a[0] else "false"), F.lit(XSD + "boolean"))
+        return bool_term(bool(a[0]))
 
     if op == "neg":
         t = c(0)
-        return _num_term(-num(t), int_cond=t["dt"].isin(INTEGER_DTS))
+        return _num_term(-num(t), integer=_in(t.dt, INTEGER_DTS))
     if op in ("+", "-", "*", "/"):
         # integer op integer stays xsd:integer (SPARQL operator mapping);
         # division always promotes to double
@@ -393,10 +543,9 @@ def _compile(n: Node, env: dict[str, Column], rd: bool) -> Column:
         r = {"+": x + y, "-": x - y, "*": x * y, "/": x / y}[op]
         if op == "/":
             return _num_term(r)
-        both_int = t0["dt"].isin(INTEGER_DTS) & t1["dt"].isin(INTEGER_DTS)
-        return _num_term(r, int_cond=both_int)
+        return _num_term(r, integer=_and(_in(t0.dt, INTEGER_DTS), _in(t1.dt, INTEGER_DTS)))
     if op == "call":
-        return _call(a[0], [(_compile(x, env, rd)) for x in a[1]], rd)
+        return _call(a[0], [_compile(x, env, rd) for x in a[1]], rd)
     raise ExprError(f"unknown op {op}")
 
 
@@ -442,140 +591,167 @@ class now_scope:
         return False
 
 
-def _call(name: str, args: list[Column], rd: bool) -> Column:
-    n = name.lower()
-    if n == "coalesce":
-        return F.coalesce(*args) if args else _null_term()
+def _bool_call(n: str, args: list[Term]):
+    """The boolean builtins (:data:`_BOOL_CALLS`), as a boolean."""
     if n == "bound":
-        return bool_term(args[0].isNotNull())
-    if n == "lang":
-        # direction suffix ("en--ltr") is not part of LANG()'s answer
-        t = args[0]
-        tag = F.element_at(F.split(F.coalesce(t["lang"], F.lit("")), "--", 2), 1)
-        return F.when(t["kind"] == LITERAL, _mk_literal(tag)).otherwise(_null_term())
-    if n == "langdir":
-        # SPARQL 1.2: base direction of a dirLangString, "" otherwise
-        t = args[0]
-        d = F.try_element_at(F.split(F.coalesce(t["lang"], F.lit("")), "--", 2), F.lit(2))
-        return F.when(t["kind"] == LITERAL, _mk_literal(F.coalesce(d, F.lit("")))).otherwise(
-            _null_term()
-        )
+        return _ok(args[0])
     if n == "langmatches":
         # empty tag is not a valid RFC-4647 tag → evaluation *error*, which is
         # what makes the README's coalesce(langMatches(lang(?o),"en"), true)
         # keep untagged literals (README.md:59-63: untagged "Charlie" is kept)
         tag = _plain_string(args[0])
         rng = _plain_string(args[1])
-        m = F.when(rng == "*", F.lit(True)).otherwise(
-            (F.lower(tag) == F.lower(rng))
-            | F.lower(tag).startswith(F.concat(F.lower(rng), F.lit("-")))
+        low = F.lower(_lit(tag))
+        m = _when(
+            _eq(rng, "*"),
+            True,
+            (low == F.lower(_lit(rng))) | low.startswith(F.concat(F.lower(_lit(rng)), F.lit("-"))),
+            typ="boolean",
         )
-        return bool_term(
-            F.when(tag.isNull() | rng.isNull() | (tag == ""), F.lit(None).cast("boolean")).otherwise(m)
-        )
+        return _when(_or(_null(tag), _null(rng), _eq(tag, "")), None, m, typ="boolean")
+    if n == "contains":
+        return F.contains(_str_col(args[0]), _str_col(args[1]))
+    if n == "strstarts":
+        return F.startswith(_str_col(args[0]), _str_col(args[1]))
+    if n == "strends":
+        return F.endswith(_str_col(args[0]), _str_col(args[1]))
+    if n == "regex":
+        pat = _str_col(args[1])
+        if len(args) > 2:
+            pat = F.concat(F.lit("(?"), _str_col(args[2]), F.lit(")"), pat)
+        return F.regexp(_str_col(args[0]), pat)
+    if n in ("isiri", "isuri"):
+        return _kind_is(args[0], IRI)
+    if n == "isblank":
+        return _kind_is(args[0], BNODE)
+    if n == "isliteral":
+        return _kind_is(args[0], LITERAL)
+    if n == "isnumeric":
+        return _and(_ok(args[0]), _is_numeric(args[0]))
+    if n == "sameterm":
+        # compared as the TERM structs' fields, as SPARQL's sameTerm reads them
+        a, b = (t if t.src is not None else Term.read(t.col()) for t in args)
+        return _same_term(a, b)
+
+
+def _pick(cond, a: Term, b: Term) -> Term:
+    """IF(cond, a, b) component by component; components the branches
+    agree on at compile time skip the test."""
+    if a.src is not None and b.src is not None:
+        return Term.read(F.when(cond, a.src).otherwise(b.src))
+
+    def pick(x, y, typ="string"):
+        if not isinstance(x, Column) and not isinstance(y, Column) and x == y:
+            return x
+        return _when(cond, _lit(x, typ), _lit(y, typ), typ)
+
+    return Term(pick(a.kind, b.kind, "tinyint"), pick(a.value, b.value), pick(a.dt, b.dt), pick(a.lang, b.lang))
+
+
+def _first(args: list[Term]) -> Term:
+    """COALESCE: the first argument that is not an error."""
+    live = []
+    for t in args:
+        if t.value is None:
+            continue
+        live.append(t)
+        if isinstance(t.value, str):  # a constant never errors
+            break
+    if not live:
+        return ERROR
+    if len(live) == 1:
+        return live[0]
+    if all(t.src is not None for t in live):
+        return Term.read(F.coalesce(*[t.src for t in live]))
+    oks = [t.value.isNotNull() if isinstance(t.value, Column) else True for t in live]
+
+    def first(comp: str, typ="string"):
+        xs = [getattr(t, comp) for t in live]
+        if not any(isinstance(x, Column) for x in xs) and len(set(xs)) == 1:
+            return xs[0]
+        return _case(list(zip(oks[:-1], xs[:-1])), _lit(xs[-1], typ), typ)
+
+    return Term(
+        first("kind", "tinyint"),
+        F.coalesce(*[_lit(t.value) for t in live]),
+        first("dt"),
+        first("lang"),
+    )
+
+
+def _call(name: str, args: list[Term], rd: bool) -> Term:
+    n = name.lower()
+    if n in _BOOL_CALLS:
+        return bool_term(_bool_call(n, args))
+    if n == "coalesce":
+        return _first(args)
+    if n == "lang":
+        # direction suffix ("en--ltr") is not part of LANG()'s answer
+        t = args[0]
+        tag = F.element_at(F.split(F.coalesce(_lit(t.lang), F.lit("")), "--", 2), 1)
+        return _literal(_when(_kind_is(t, LITERAL), tag))
+    if n == "langdir":
+        # SPARQL 1.2: base direction of a dirLangString, "" otherwise
+        t = args[0]
+        d = F.try_element_at(F.split(F.coalesce(_lit(t.lang), F.lit("")), "--", 2), F.lit(2))
+        return _literal(_when(_kind_is(t, LITERAL), F.coalesce(d, F.lit(""))))
     if n == "str":
         t = args[0]
-        return F.when(
-            t["kind"].isin(IRI, LITERAL), _mk_literal(t["value"])
-        ).otherwise(_null_term())
+        return _literal(_when(_in(t.kind, (IRI, LITERAL)), t.value))
     if n in ("iri", "uri"):
         t = args[0]
-        ok = (t["kind"] == IRI) | ((t["kind"] == LITERAL) & t["dt"].isNull() & t["lang"].isNull())
-        return F.when(ok, _mk_iri(t["value"])).otherwise(_null_term())
+        ok = _or(_eq(t.kind, IRI), _and(_eq(t.kind, LITERAL), _null(t.dt), _null(t.lang)))
+        return Term(IRI, _when(ok, t.value))
     if n == "datatype":
         t = args[0]
-        lang_dt = F.when(
-            t["lang"].contains("--"), F.lit(RDF_DIRLANGSTRING)
-        ).otherwise(F.lit(RDF_LANGSTRING))
-        return F.when(
-            t["kind"] == LITERAL,
-            _mk_iri(
-                F.when(t["lang"].isNotNull(), lang_dt).otherwise(
-                    F.coalesce(t["dt"], F.lit(XSD_STRING))
-                )
-            ),
-        ).otherwise(_null_term())
-    if n in ("isiri", "isuri"):
-        return bool_term(args[0]["kind"] == IRI)
+        if isinstance(t.lang, Column):
+            lang_dt = F.when(t.lang.contains("--"), F.lit(RDF_DIRLANGSTRING)).otherwise(
+                F.lit(RDF_LANGSTRING)
+            )
+        else:
+            lang_dt = RDF_DIRLANGSTRING if "--" in (t.lang or "") else RDF_LANGSTRING
+        plain_dt = F.coalesce(t.dt, F.lit(XSD_STRING)) if isinstance(t.dt, Column) else t.dt or XSD_STRING
+        return Term(IRI, _when(_kind_is(t, LITERAL), _when(_not(_null(t.lang)), lang_dt, plain_dt)))
     if n == "istriple":
-        from sopspark.terms import QUOTED
-
-        return bool_term(args[0]["kind"] == QUOTED)
+        return bool_term(_kind_is(args[0], QUOTED))
     if n == "triple":
         # TRIPLE(s, p, o) → a quoted-triple term (SPARQL-star 17.4.2.8):
         # canonical NT encoding, matching the parsers' QUOTED convention
-        from sopspark.terms import QUOTED, nt_term
+        from sopspark.terms import nt_term
 
         enc = F.concat(
-            F.lit("<< "), nt_term(args[0]), F.lit(" "), nt_term(args[1]),
-            F.lit(" "), nt_term(args[2]), F.lit(" >>"),
+            F.lit("<< "), nt_term(args[0].col()), F.lit(" "), nt_term(args[1].col()),
+            F.lit(" "), nt_term(args[2].col()), F.lit(" >>"),
         )
-        return F.struct(
-            F.lit(QUOTED).cast("tinyint").alias("kind"),
-            enc.alias("value"),
-            F.lit(None).cast("string").alias("dt"),
-            F.lit(None).cast("string").alias("lang"),
-        )
+        return Term(QUOTED, enc)
     if n in ("subject", "predicate", "object"):
         # SUBJECT/PREDICATE/OBJECT(t) destructure a quoted-triple term
         # (SPARQL-star 17.4.2.9-11) — same depth-bounded regex machinery as
         # << ?s ?p ?o >> patterns; non-triple input → error (NULL)
         from sopspark.functions.sparql import _decode_nt_term, _nt_term_re
-        from sopspark.terms import QUOTED
 
         tre = _nt_term_re()
         pat = f"^<< ({tre}) ({tre}) ({tre}) >>$"
         grp = {"subject": 1, "predicate": 2, "object": 3}[n]
-        part = F.regexp_extract(args[0]["value"], pat, grp)
-        return F.when(
-            (args[0]["kind"] == QUOTED) & (part != ""), _decode_nt_term(part)
-        )
-    if n == "isblank":
-        return bool_term(args[0]["kind"] == BNODE)
-    if n == "isliteral":
-        return bool_term(args[0]["kind"] == LITERAL)
-    if n == "isnumeric":
-        return bool_term(is_numeric_term(args[0]))
+        part = F.regexp_extract(_lit(args[0].value), pat, grp)
+        return Term.read(F.when(_bool(_and(_eq(args[0].kind, QUOTED), part != "")), _decode_nt_term(part)))
     if n in ("lcase", "ucase"):
         t = args[0]
         fn = F.lower if n == "lcase" else F.upper
-        return F.when(
-            t["kind"] == LITERAL, _mk_literal(fn(t["value"]), t["dt"], t["lang"])
-        ).otherwise(_null_term())
+        return _literal(_when(_eq(t.kind, LITERAL), fn(_lit(t.value))), t.dt, t.lang)
     if n == "strlen":
-        return _num_term(F.length(_plain_string(args[0])).cast("double"), integer=True)
-    if n == "contains":
-        return bool_term(F.contains(_plain_string(args[0]), _plain_string(args[1])))
-    if n == "strstarts":
-        return bool_term(F.startswith(_plain_string(args[0]), _plain_string(args[1])))
-    if n == "strends":
-        return bool_term(F.endswith(_plain_string(args[0]), _plain_string(args[1])))
+        return _num_term(F.length(_str_col(args[0])).cast("double"), integer=True)
     if n == "substr":
         t = args[0]
         start = num(args[1]).cast("int")
-        if len(args) > 2:
-            length = num(args[2]).cast("int")
-            v = F.substring(t["value"], start, length)
-        else:
-            v = F.substring(t["value"], start, F.lit(2147483647))
-        return F.when(t["kind"] == LITERAL, _mk_literal(v, t["dt"], t["lang"])).otherwise(_null_term())
+        length = num(args[2]).cast("int") if len(args) > 2 else F.lit(2147483647)
+        v = F.substring(_lit(t.value), start, length)
+        return _literal(_when(_eq(t.kind, LITERAL), v), t.dt, t.lang)
     if n == "concat":
-        vals = [_plain_string(x) for x in args]
-        return _mk_literal(F.concat(*vals))
+        return _literal(F.concat(*[_str_col(x) for x in args]))
     if n == "replace":
-        v = _plain_string(args[0])
-        pat = _plain_string(args[1])
-        rep = _plain_string(args[2])
-        # pattern must be a literal for regexp_replace's Column form pre-3.0;
-        # Spark ≥3 accepts Columns.
-        return _mk_literal(F.regexp_replace(v, pat, rep))
-    if n == "regex":
-        v = _plain_string(args[0])
-        pat = _plain_string(args[1])
-        if len(args) > 2:
-            flags = _plain_string(args[2])
-            pat = F.concat(F.lit("(?"), flags, F.lit(")"), pat)
-        return bool_term(v.rlike(pat) if isinstance(pat, str) else F.regexp(v, pat))
+        # Spark ≥3 takes Column pattern/replacement in regexp_replace
+        return _literal(F.regexp_replace(*[_str_col(x) for x in args[:3]]))
     if n == "abs":
         return _num_term(F.abs(num(args[0])))
     if n == "round":
@@ -585,74 +761,51 @@ def _call(name: str, args: list[Column], rd: bool) -> Column:
     if n == "floor":
         return _num_term(F.floor(num(args[0])).cast("double"))
     if n == "strbefore":
-        v, sep = _plain_string(args[0]), _plain_string(args[1])
+        v, sep = _str_col(args[0]), _str_col(args[1])
         idx = F.instr(v, sep)
-        return _mk_literal(F.when(idx > 0, F.substring(v, 1, idx - 1)).otherwise(F.lit("")))
+        return _literal(F.when(idx > 0, F.substring(v, 1, idx - 1)).otherwise(F.lit("")))
     if n == "strafter":
-        v, sep = _plain_string(args[0]), _plain_string(args[1])
+        v, sep = _str_col(args[0]), _str_col(args[1])
         idx = F.instr(v, sep)
-        return _mk_literal(
-            F.when(idx > 0, F.substr(v, idx + F.length(sep), F.length(v))).otherwise(F.lit(""))
-        )
-    if n == "sameterm":
-        a, b = args[0], args[1]
-        ident = (
-            (a["kind"] == b["kind"])
-            & (a["value"] == b["value"])
-            & a["dt"].eqNullSafe(b["dt"])
-            & a["lang"].eqNullSafe(b["lang"])
-        )
-        return bool_term(ident)
+        return _literal(F.when(idx > 0, F.substr(v, idx + F.length(sep), F.length(v))).otherwise(F.lit("")))
     if n == "if":
-        return F.when(ebv(args[0]), args[1]).otherwise(args[2])
+        return _pick(ebv(args[0]), args[1], args[2])
     if n == "strdt":
-        return _mk_literal(_plain_string(args[0]), args[1]["value"])
+        return _literal(_plain_string(args[0]), args[1].value)
     if n == "strlang":
-        return _mk_literal(_plain_string(args[0]), None, _plain_string(args[1]))
+        return _literal(_plain_string(args[0]), None, _plain_string(args[1]))
     if n == "strlangdir":
         # SPARQL 1.2: dirLangString constructor — tag preserved as given
         # (matching STRLANG), direction must be exactly lowercase
         # "ltr"/"rtl"; anything else is an evaluation error (NULL → row
         # dropped / unbound)
-        d = _plain_string(args[2])
-        tag = F.when(
-            d.isin("ltr", "rtl"),
-            F.concat(_plain_string(args[1]), F.lit("--"), d),
-        )
-        return F.when(tag.isNotNull(), _mk_literal(_plain_string(args[0]), None, tag)).otherwise(
-            _null_term()
-        )
+        d = _str_col(args[2])
+        tag = F.when(d.isin("ltr", "rtl"), F.concat(_str_col(args[1]), F.lit("--"), d))
+        return _literal(F.when(tag.isNotNull(), _str_col(args[0])), None, tag)
     if n == "haslang":
         # SPARQL 1.2: literal with a (possibly directional) language tag;
         # an unbound/error argument propagates the error (NULL), it does
         # not evaluate to false
         t = args[0]
-        return F.when(
-            t.isNotNull(),
-            bool_term((t["kind"] == LITERAL) & (F.coalesce(t["lang"], F.lit("")) != "")),
-        ).otherwise(_null_term())
+        has = _and(_eq(t.kind, LITERAL), F.coalesce(_lit(t.lang), F.lit("")) != "")
+        return bool_term(_when(_ok(t), has, typ="boolean"))
     if n == "haslangdir":
         # SPARQL 1.2: literal whose language tag carries a base direction
         t = args[0]
-        return F.when(
-            t.isNotNull(),
-            bool_term(
-                (t["kind"] == LITERAL)
-                & F.coalesce(t["lang"], F.lit("")).contains("--")
-            ),
-        ).otherwise(_null_term())
+        has = _and(_eq(t.kind, LITERAL), F.coalesce(_lit(t.lang), F.lit("")).contains("--"))
+        return bool_term(_when(_ok(t), has, typ="boolean"))
     if n in ("md5", "sha1", "sha256", "sha384", "sha512"):
-        s = _plain_string(args[0])
+        s = _str_col(args[0])
         if n == "md5":
             h = F.md5(s)
         elif n == "sha1":
             h = F.sha1(s)
         else:
             h = F.sha2(s, int(n[3:]))
-        return _mk_literal(h)
+        return _literal(h)
     if n == "encode_for_uri":
         # url_encode is form-encoding (space → '+'); SPARQL wants RFC 3986
-        return _mk_literal(F.regexp_replace(F.url_encode(_plain_string(args[0])), r"\+", "%20"))
+        return _literal(F.regexp_replace(F.url_encode(_str_col(args[0])), r"\+", "%20"))
     if n in ("year", "month", "day", "hours", "minutes", "seconds"):
         # fn:*-from-dateTime operate on the literal's OWN lexical
         # components (its own timezone's wall clock) — converting through
@@ -661,8 +814,6 @@ def _call(name: str, args: list[Column], rd: bool) -> Column:
         # 14, not the session-zone hour; DAY can even cross midnight).
         # Extract from the lexical form directly; malformed / non-dateTime
         # input extracts "" → NULL → error term.
-        is_dt = (args[0]["kind"] == LITERAL) & (args[0]["dt"] == XSD + "dateTime")
-        lex = F.when(is_dt, args[0]["value"])
         pattern = {
             "year": r"^(-?\d{4,})-\d{2}-\d{2}T",
             "month": r"^-?\d{4,}-(\d{2})-\d{2}T",
@@ -671,33 +822,26 @@ def _call(name: str, args: list[Column], rd: bool) -> Column:
             "minutes": r"T\d{2}:(\d{2}):\d{2}",
             "seconds": r"T\d{2}:\d{2}:(\d{2}(?:\.\d+)?)",
         }[n]
-        raw = F.regexp_extract(lex, pattern, 1)
+        raw = F.regexp_extract(_dt_lexical(args[0]), pattern, 1)
         raw = F.when(raw != "", raw)
-        if n == "seconds":
-            # xsd:decimal seconds including the fraction
-            return _num_term(raw.cast("double"))
-        return _num_term(raw.cast("double"), integer=True)
+        # SECONDS is xsd:decimal, fraction included
+        return _num_term(raw.cast("double"), integer=n != "seconds")
     if n in ("tz", "timezone"):
-        lex = F.when((args[0]["kind"] == LITERAL) & (args[0]["dt"] == XSD + "dateTime"), args[0]["value"])
-        return _mk_literal(F.coalesce(F.regexp_extract(lex, r"(Z|[+-]\d{2}:\d{2})$", 1), F.lit("")))
+        lex = _dt_lexical(args[0])
+        return _literal(F.coalesce(F.regexp_extract(lex, r"(Z|[+-]\d{2}:\d{2})$", 1), F.lit("")))
     if n == "bnode":
         if args:  # BNODE(str): deterministic label from the string
-            lbl = F.concat(F.lit("eb"), F.substring(F.sha2(_plain_string(args[0]), 256), 1, 16))
+            lbl = F.concat(F.lit("eb"), F.substring(F.sha2(_str_col(args[0]), 256), 1, 16))
         else:  # BNODE(): fresh per row
             lbl = F.concat(F.lit("eb"), F.monotonically_increasing_id().cast("string"))
-        return F.struct(
-            F.lit(BNODE).cast("tinyint").alias("kind"),
-            lbl.alias("value"),
-            F.lit(None).cast("string").alias("dt"),
-            F.lit(None).cast("string").alias("lang"),
-        )
+        return Term(BNODE, lbl)
     if n == "now":
         # SPARQL 17.4.5.1: NOW() is one fixed instant for the whole query
         # execution — pinned once per compilation scope (now_scope), so two
         # NOW() occurrences in one query can't straddle a millisecond.
         # SOPSPARK_NOW (xsd:dateTime text) overrides it for reproducible
         # runs/tests.
-        return _mk_literal(F.lit(_now_pin()), F.lit(XSD + "dateTime"))
+        return _literal(_now_pin(), XSD + "dateTime")
     if n in ("uuid", "struuid"):
         # Fresh value per row, RFC-4122 v4 shape. Derived from a 128-bit hash
         # of the per-row monotonic id + a salt, so runs are reproducible under
@@ -716,13 +860,14 @@ def _call(name: str, args: list[Column], rd: bool) -> Column:
             F.substring(hx, 21, 12),
         )
         if n == "uuid":
-            return _mk_iri(F.concat(F.lit("urn:uuid:"), u))
-        return _mk_literal(u)
+            return Term(IRI, F.concat(F.lit("urn:uuid:"), u))
+        return _literal(u)
     if n == "rand":
         # xsd:double in [0,1); seeded (SOPSPARK_RAND_SEED, default 42) so the
         # same job re-run over the same partitioning reproduces its output.
         return _num_term(F.rand(int(os.environ.get("SOPSPARK_RAND_SEED", "42"))))
     raise ExprError(f"unsupported function {name}()")
+
 
 
 # ---------------------------------------------------------------------------
@@ -938,7 +1083,7 @@ def compile_expr(
 ) -> Column:
     """Compile a SPARQL expression string to a TERM-struct Column.
 
-    ``env`` maps variable names to term columns; default binds
+    ``env`` maps variable names to TERM-struct columns; default binds
     ``?s ?p ?o ?g`` to the like-named quad columns, matching the reference's
     binding rule (``README.md:199-201``).
     """
@@ -951,8 +1096,7 @@ def compile_expr(
 def compile_filter(src: str, env: dict[str, Column] | None = None, recognize_datatypes: bool = True) -> Column:
     """Compile to a boolean Column with EBV + drop-on-error semantics
     (NULL → false, matching ``src/filter.rs:36``). Boolean-valued nodes
-    compile natively (no TERM-struct round trip) — keeps the Catalyst tree
-    small enough for whole-stage codegen."""
+    compile natively to boolean Columns (no ``xsd:boolean`` round trip)."""
     if env is None:
         env = {v: F.col(v) for v in ("s", "p", "o", "g")}
     node = parse_expr(src)

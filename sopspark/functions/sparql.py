@@ -1366,10 +1366,11 @@ def _eval_group(quads: DataFrame, g: PatternGroup) -> DataFrame | None:
         raise SparqlError("empty group pattern")
 
     def _apply_bind(sol: DataFrame, var: str, node: Node) -> DataFrame:
-        from sopspark.functions.expr import term_eq
+        from sopspark.functions.expr import Term, _compile, term_eq
 
         env = {c: F.col(c) for c in sol.columns}
-        val = node.col(env, True)
+        t = _compile(node, env, True)
+        val = t.col()
         if var in sol.columns:
             # the variable is already pattern-bound: the legal reading is
             # BIND-before-pattern (§10.1 up-to-point rule), whose algebra
@@ -1382,7 +1383,7 @@ def _eval_group(quads: DataFrame, g: PatternGroup) -> DataFrame | None:
             keep = (
                 val.isNull()
                 | F.col(var).isNull()
-                | F.coalesce(term_eq(val, F.col(var)), F.lit(False))
+                | F.coalesce(term_eq(t, Term.read(F.col(var))), F.lit(False))
             )
             out = sol.where(keep)
             if var in _mn(sol):  # only maybe-null vars can be unbound
@@ -1684,7 +1685,8 @@ def _eval_aggregate(sol: DataFrame, q: Query, rd: bool) -> tuple[DataFrame, list
     from sopspark.functions.expr import (
         AGG_FUNCS,
         INTEGER_DTS,
-        _mk_literal,
+        _compile,
+        _literal,
         _null_term,
         _num_term,
         num,
@@ -1708,10 +1710,11 @@ def _eval_aggregate(sol: DataFrame, q: Query, rd: bool) -> tuple[DataFrame, list
             else:
                 inner = args[0].col(env, rd)
             c = F.count_distinct(inner) if distinct else F.count(inner)
-            return _num_term(c.cast("double"), integer=True).alias(alias)
-        inner_t = args[0].col(env, rd)
+            return _num_term(c.cast("double"), integer=True).col().alias(alias)
+        it = _compile(args[0], env, rd)
+        inner_t = it.col()
         if name in ("sum", "avg"):
-            v = num(inner_t)
+            v = num(it)
             # §18.5.1.2: op:numeric-add over a non-numeric BOUND value is
             # a type error and the whole aggregate errors (unbound result)
             # — F.sum would silently skip it and return a wrong total.
@@ -1732,19 +1735,18 @@ def _eval_aggregate(sol: DataFrame, q: Query, rd: bool) -> tuple[DataFrame, list
                 c = F.sum(v) if name == "sum" else F.avg(v)
             if name == "sum":
                 # SPARQL: SUM over an integer-only group stays xsd:integer
-                all_int = F.bool_and(inner_t["dt"].isin(INTEGER_DTS))
-                res = F.when(all_int, _num_term(c, integer=True)).otherwise(_num_term(c))
+                res = _num_term(c, integer=F.bool_and(inner_t["dt"].isin(INTEGER_DTS)))
             else:
                 res = _num_term(c)
             return (
                 F.when(has_err, _null_term())
-                .when(c.isNull(), _num_term(F.lit(0.0), integer=True))
-                .otherwise(res)
+                .when(c.isNull(), _num_term(F.lit(0.0), integer=True).col())
+                .otherwise(res.col())
                 .alias(alias)
             )
         if name in ("min", "max"):
             # numeric when possible, else codepoint order on the lexical form
-            key = F.struct(F.coalesce(num(inner_t), F.lit(0.0)).alias("n"), inner_t["value"].alias("v"))
+            key = F.struct(F.coalesce(num(it), F.lit(0.0)).alias("n"), inner_t["value"].alias("v"))
             c = F.min_by(inner_t, key) if name == "min" else F.max_by(inner_t, key)
             return c.alias(alias)
         if name == "sample":
@@ -1760,7 +1762,7 @@ def _eval_aggregate(sol: DataFrame, q: Query, rd: bool) -> tuple[DataFrame, list
             if len(args) > 1 and args[-1].op == "lit_const":
                 sep = args[-1].args[0]
             vals = F.collect_set(inner_t["value"]) if distinct else F.collect_list(inner_t["value"])
-            return _mk_literal(F.array_join(F.array_sort(vals), sep)).alias(alias)
+            return _literal(F.array_join(F.array_sort(vals), sep)).col().alias(alias)
         raise SparqlError(f"unsupported aggregate {name}")
 
     names: list[str] = []
@@ -1823,13 +1825,14 @@ def _eval_aggregate(sol: DataFrame, q: Query, rd: bool) -> tuple[DataFrame, list
 
 def _apply_order_limit(out: DataFrame, q: Query, rd: bool) -> DataFrame:
     if q.order_by:
-        from sopspark.functions.expr import num
+        from sopspark.functions.expr import _compile, num
 
         keys = []
         for node, asc in q.order_by:
             env = {c: F.col(c) for c in out.columns}
-            t = node.col(env, rd)
-            k = F.struct(t["kind"].alias("k"), F.coalesce(num(t), F.lit(0.0)).alias("n"), t["value"].alias("v"))
+            t = _compile(node, env, rd)
+            c = t.col()
+            k = F.struct(c["kind"].alias("k"), F.coalesce(num(t), F.lit(0.0)).alias("n"), c["value"].alias("v"))
             keys.append(k.asc() if asc else k.desc())
         out = out.orderBy(*keys)
     if q.offset:

@@ -142,11 +142,19 @@ def label_propagation(
     (node-sized) label table keyed on the neighbor id, then one
     (node,label) count aggregate and one per-node argmax aggregate — the
     argmax is a single ``min(struct(-cnt, label))`` so both aggregates
-    get map-side partial combine and no window/sort is needed. Hot hubs
-    skew only the count agg's (v,label) key, which is already salted by
-    the label dimension; AQE skew-split covers the join. Lineage is
+    get map-side partial combine and no window/sort is needed. Lineage is
     truncated with lazy ``localCheckpoint`` every ``checkpoint_every``
     rounds (same idiom as :func:`pagerank`).
+
+    Hub skew: the cached adjacency is filled through a ``repartition("nbr")``
+    exchange, which AQE never splits, so one task holds a hub's whole
+    adjacency list (every edge that points at it). The trade was taken so
+    each round's join could reuse that partitioning instead of shuffling
+    the adjacency again. Spark 4.1's planner does not trust the partitioning
+    of a cached relation, though: the physical plan still has a per-round
+    exchange above the cache scan, so the trade currently buys nothing. The
+    count agg's (v,label) key is salted by the label dimension and does not
+    skew on hubs.
     """
     e = (
         edges.select(F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b"))
@@ -157,11 +165,9 @@ def label_propagation(
     adj = (
         e.select(F.col("a").alias("v"), F.col("b").alias("nbr"))
         .unionAll(e.select(F.col("b").alias("v"), F.col("a").alias("nbr")))
-        # pre-partition the (big) adjacency on the per-round join key: one
-        # setup shuffle instead of one adjacency exchange EVERY round — the
-        # cached partitioning satisfies the join's distribution, so each
-        # round only shuffles the node-sized label table (guide §2: remove
-        # shuffles outright where the data is already partitioned)
+        # pre-partition the (big) adjacency on the per-round join key, meant
+        # to spare each round its adjacency exchange (see the docstring:
+        # the planner still re-shuffles the cache scan)
         .repartition("nbr")
         .persist()
     )

@@ -138,9 +138,9 @@ def resolve_alias(alias: str) -> str:
 
 import re as _re
 
-PERSON_ALIASES = sorted(
-    set(_POOL_ALIASES) | set(AMBIGUOUS), key=len, reverse=True
-)
+# longest first so the alternation prefers full names; ties by name, so the
+# pattern text (and the oracle SQL built from it) is hash-seed independent
+PERSON_ALIASES = sorted(set(_POOL_ALIASES) | set(AMBIGUOUS), key=lambda a: (-len(a), a))
 PERSON_ALIAS_RE = _re.compile(r"\b(" + "|".join(map(_re.escape, PERSON_ALIASES)) + r")\b")
 
 

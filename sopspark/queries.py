@@ -204,8 +204,12 @@ import os as _os
 # once to parquet) — both the Spark flagship query and its DuckDB oracle read
 # these same files, so the whole assembly→extract→link→sameAs-CC→materialize
 # pipeline is machine-verified end to end.
+# The oracle SQL names the corpus relative to the checkout root (DuckDB
+# resolves it against the working directory, the root in every runner), so
+# its text does not depend on where the checkout lives.
+KG_CORPUS_REL = "tests/golden/kg_corpus"
 KG_CORPUS_DIR = _os.path.normpath(
-    _os.path.join(_os.path.dirname(_os.path.abspath(__file__)), "..", "tests", "golden", "kg_corpus")
+    _os.path.join(_os.path.dirname(_os.path.abspath(__file__)), "..", KG_CORPUS_REL)
 )
 
 
@@ -2566,9 +2570,9 @@ def _kg_flagship_oracle_sql() -> str:
     from sopspark.kg.synth import PERSON_ALIAS_RE
     from sopspark.kg.vocab import AGE, KNOWS, LIVES_IN, WORKS_AT
 
-    tr = f"read_parquet('{KG_CORPUS_DIR}/transcripts.parquet')"
-    al = f"read_parquet('{KG_CORPUS_DIR}/alias_dict.parquet')"
-    sa = f"read_parquet('{KG_CORPUS_DIR}/sameas.parquet')"
+    tr = f"read_parquet('{KG_CORPUS_REL}/transcripts.parquet')"
+    al = f"read_parquet('{KG_CORPUS_REL}/alias_dict.parquet')"
+    sa = f"read_parquet('{KG_CORPUS_REL}/sameas.parquet')"
     apat = PERSON_ALIAS_RE.pattern
 
     def pair_tmpl(pat: str, pred: str, etype: str) -> str:

@@ -6,6 +6,8 @@ the documented outcome.
 
 import os
 
+import pytest
+
 from sopspark.operators.filter_map import filter_quads, map_quads
 from sopspark.operators.serialize import collect_nq_lines
 from sopspark.operators.transforms import absolutize, dedup, merge, relativize, validate
@@ -158,3 +160,73 @@ def test_expr_numeric_comparison(spark):
     assert [r.s.value for r in out.collect()] == ["http://e/a"]
     out2 = filter_quads(df, "?o > 5 && ?o < 50")
     assert {r.s.value for r in out2.collect()} == {"http://e/a", "http://e/b"}
+
+
+# one row per subject letter: tagged, untagged, typed, and a blank-node object
+_NESTED_ROWS = [
+    '<http://e/a> <http://e/P> "Alice"@en .',
+    '<http://e/b> <http://e/P> "Bob"@fr .',
+    '<http://e/c> <http://e/P> "Charlie" .',
+    '<http://e/d> <http://e/P> "Zed"@de .',
+    "<http://e/e> <http://e/P> _:x .",
+    '<http://e/f> <http://e/P> "7"^^<http://www.w3.org/2001/XMLSchema#integer> .',
+]
+_INT = "http://www.w3.org/2001/XMLSchema#integer"
+
+
+@pytest.mark.parametrize(
+    "expr, kept",
+    [
+        # untagged literals, the blank node and the integer make langMatches
+        # error twice → true; "Bob"@fr stops at the first (false) langMatches
+        ('coalesce(langMatches(lang(?o), "en"), langMatches(lang(?o), "fr"), true)', "acef"),
+        ("strlen(lcase(lcase(str(?o)))) > 3", "ac"),
+        ("!isIRI(str(?o))", "abcdf"),  # str(_:x) errors, and !error drops
+        ("?o + 1 > 7 && strlen(str(?s)) > 0", "f"),
+        ("if(isLiteral(?o), strlen(lcase(str(?o))) >= 5, false)", "ac"),
+        ('lcase(str(?o)) != "bob"', "acdf"),
+        ('coalesce(lang(lcase(?o)), "none") = "none"', "e"),
+    ],
+)
+def test_filter_nested_expressions(spark, expr, kept):
+    out = filter_quads(_lines(spark, *_NESTED_ROWS), expr)
+    assert "".join(sorted(r.s.value[-1] for r in out.collect())) == kept
+
+
+@pytest.mark.parametrize(
+    "component, expr, expected",
+    [
+        # str(_:x) errors → the row is dropped
+        ("o", "lcase(str(?o))", {"a": "alice", "b": "bob", "c": "charlie", "d": "zed", "f": "7"}),
+        ("o", 'concat(lcase(str(?o)), "-", lang(?o))',
+         {"a": "alice-en", "b": "bob-fr", "c": "charlie-", "d": "zed-de", "f": "7-"}),
+        ("o", "?o * 2 + 1", {"f": ("15", _INT)}),
+        ("p", "iri(lcase(lcase(str(?p))))", {c: "http://e/p" for c in "abcdef"}),
+    ],
+)
+def test_map_nested_expressions(spark, component, expr, expected):
+    out = map_quads(_lines(spark, *_NESTED_ROWS), **{component: expr})
+    got = {}
+    for r in out.collect():
+        t = r[component]
+        got[r.s.value[-1]] = t.value if t.dt is None else (t.value, t.dt)
+    assert got == expected
+
+
+def _analyzed_chars(df) -> int:
+    return len(df._jdf.queryExecution().analyzed().toString())
+
+
+def test_expression_plan_size_linear(spark):
+    """Each sub-term is compiled once: the plan grows linearly with the
+    expression (a struct-per-node compiler copied every argument subtree
+    several times per nesting level and analyzed the first filter to
+    320,584 characters)."""
+    q = _lines(spark, *_NESTED_ROWS)
+    idiom = _analyzed_chars(filter_quads(q, 'coalesce(langMatches(lang(?o), "en"), true)'))
+    assert idiom <= 32_058, idiom
+    sizes = [
+        _analyzed_chars(map_quads(q, p="iri(" + "lcase(" * k + "str(?p)" + ")" * k + ")"))
+        for k in range(1, 7)
+    ]
+    assert sizes[5] <= 6 * sizes[0], sizes

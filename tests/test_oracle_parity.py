@@ -3,6 +3,9 @@ column names, and order-insensitive value equality per query."""
 
 import decimal
 import math
+import os
+import subprocess
+import sys
 
 import duckdb
 import pytest
@@ -80,3 +83,24 @@ def test_oracle_not_vacuous(ddb, name):
     parity match proves nothing (caught live: a filter literal that
     matched nothing made tpch_profit 'pass' on 0 == 0 rows)."""
     assert len(ddb.execute(entry_mod.oracle_sql()[name]).fetchall()) > 0
+
+
+def test_oracle_sql_rendering_is_deterministic():
+    """Every oracle's SQL text is byte-identical under two hash seeds and
+    names no absolute checkout path (so another checkout renders it too)."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import json, sys; sys.path.insert(0, sys.argv[1]); "
+        "from sopspark.queries import ORACLES; "
+        "sys.stdout.write(json.dumps(ORACLES, sort_keys=True))"
+    )
+    texts = [
+        subprocess.run(
+            [sys.executable, "-c", code, root],
+            env={**os.environ, "PYTHONHASHSEED": seed},
+            capture_output=True, text=True, check=True,
+        ).stdout
+        for seed in ("1", "2")
+    ]
+    assert texts[0] == texts[1]
+    assert root not in texts[0]
