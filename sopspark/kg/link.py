@@ -42,14 +42,9 @@ def best_candidates(alias_dict: DataFrame) -> DataFrame:
     are array copies instead of scheduled stages — the small fixed jobs
     that otherwise sit in the serial fraction of the scaling ratio. A
     dictionary read from a real table takes the distributed aggregate."""
-    try:
-        plan = alias_dict._jdf.queryExecution().optimizedPlan()
-        is_local = plan.getClass().getSimpleName() == "LocalRelation"
-    except Exception:
-        is_local = False
-    if is_local:
-        from sopspark.session import local_df
+    from sopspark.session import is_local, local_df
 
+    if is_local(alias_dict):
         rows = alias_dict.select("alias", "etype", "iri", "prior").collect()
         best: dict = {}
         for r in rows:

@@ -272,7 +272,7 @@ def synth_corpus(
 
 
 def alias_df(spark: SparkSession) -> DataFrame:
-    # VALUES inline table (LocalRelation), not createDataFrame (RDD): the
+    # Arrow-built LocalRelation, not createDataFrame over rows (RDD): the
     # linking broadcast builds over it then run without cluster jobs —
     # keeps the tiny-dictionary preamble out of the serial fraction
     from sopspark.session import local_df

@@ -9,6 +9,16 @@ each round two hash aggregates + one broadcast-free join.
 
 Why not GraphFrames: not available in this environment, and the star
 algorithm is ~40 lines of DataFrame code with the same asymptotics.
+
+Small-input plan: :func:`driver_edges` is the one gate for every graph
+algorithm with a driver plan (this module's union-find and
+``kg.graphalgo``'s pagerank, personalized_pagerank and
+label_propagation). At or under :data:`DRIVER_THRESHOLD` (200k) distinct
+edges it brings the edge set to the driver in one collect, and the
+algorithm runs there and returns a ``LocalRelation``. At 200k edges the
+driver plan still beats the distributed one for all four (measurements
+in the ``kg.graphalgo`` module docstring); ``driver_threshold=0``
+forces the distributed plan.
 """
 
 from __future__ import annotations
@@ -45,9 +55,44 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return out.where(F.col("a") != F.col("b")).distinct()
 
 
-def _driver_union_find(rows: list[tuple], spark, dtype: str = "string") -> DataFrame:
-    """Small-input physical plan: union-find on the driver — the CC analogue
-    of broadcasting a small dimension instead of shuffling."""
+# distinct edges at or under which every graph algorithm with a driver plan
+# takes it (measured at 200k: kg/graphalgo.py module docstring)
+DRIVER_THRESHOLD = 200_000
+
+
+def driver_edges(edges: DataFrame, threshold: int):
+    """Small-input physical plan gate shared by :func:`connected_components`
+    and ``kg.graphalgo``'s pagerank, personalized_pagerank and
+    label_propagation — the graph analogue of broadcasting a small side.
+
+    ``edges`` is an algorithm's cleaned edge set (projected, filtered)
+    before its ``distinct``. Returns the distinct edges as a pandas frame
+    when there are at most ``threshold`` of them, else ``None`` and the
+    caller runs its distributed plan; ``threshold <= 0`` always returns
+    ``None``. The edge set reaches the driver in one collect: a driver
+    literal (a ``LocalRelation``) is copied out with no job, anything
+    else is collected through Arrow with ``limit(threshold + 1)``, so a
+    large input ships at most ``threshold + 1`` rows before falling back.
+    """
+    from sopspark.session import is_local
+
+    if threshold <= 0:
+        return None
+    if is_local(edges):
+        import pandas as pd
+
+        rows = edges.collect()
+        pdf = pd.DataFrame.from_records(rows, columns=edges.columns).drop_duplicates(
+            ignore_index=True
+        )
+    else:
+        pdf = edges.distinct().limit(threshold + 1).toPandas()
+    return pdf if len(pdf) <= threshold else None
+
+
+def _driver_union_find(pdf, spark, dtype: str) -> DataFrame:
+    """Small-input physical plan: union-find on the driver over the
+    distinct (a, b) edges of ``pdf``."""
     parent: dict = {}
 
     def find(x):
@@ -56,7 +101,7 @@ def _driver_union_find(rows: list[tuple], spark, dtype: str = "string") -> DataF
             x = parent[x]
         return x
 
-    for a, b in rows:
+    for a, b in zip(pdf["a"].tolist(), pdf["b"].tolist()):
         ra, rb = find(a), find(b)
         if ra != rb:
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
@@ -75,58 +120,29 @@ def connected_components(
     edges: DataFrame,
     max_iter: int = 50,
     checkpoint_every: int = 3,
-    driver_threshold: int = 200_000,
+    driver_threshold: int = DRIVER_THRESHOLD,
 ) -> DataFrame:
     """(a, b) undirected edge list → (node, rep) with rep = min node id of
     the component. Deterministic; string or numeric ids both work (min is
     lexicographic for strings).
 
-    Inputs under ``driver_threshold`` edges run as driver-side union-find
-    (O(n α(n)), one job) — at 100 TB the equivalence-edge table is still
-    typically ≪ the corpus; the distributed star iterations kick in above
-    the threshold.
+    Inputs of at most ``driver_threshold`` distinct edges run as
+    driver-side union-find (O(n α(n)), one collect through
+    :func:`driver_edges`; a driver-literal edge list costs no job at
+    all) — at 100 TB the equivalence-edge table is still typically ≪ the
+    corpus; the distributed star iterations kick in above the threshold,
+    and ``driver_threshold=0`` forces them.
     """
     e = edges.select(F.col(edges.columns[0]).alias("a"), F.col(edges.columns[1]).alias("b"))
+    # null-propagating: an edge with a null endpoint is dropped on both plans
+    e = e.where(F.col("a") != F.col("b"))
 
-    if driver_threshold > 0:
-        # driver-literal edge lists (createDataFrame) optimize to a
-        # LocalRelation: collect() is a driver-side array copy, no job, no
-        # shuffle — skip the distinct entirely (union-find absorbs duplicate
-        # edges). This keeps the tiny-sameAs path at zero cluster jobs,
-        # which matters for the serial fraction of the scaling ratio.
-        try:
-            plan = e._jdf.queryExecution().optimizedPlan()
-            is_local = plan.getClass().getSimpleName() == "LocalRelation"
-        except Exception:
-            is_local = False
-        if is_local:
-            head = e.collect()
-            if len(head) <= driver_threshold:
-                dtype = dict(e.dtypes)["a"]
-                return _driver_union_find(
-                    [
-                        (r["a"], r["b"])
-                        for r in head
-                        # mirror the distributed path's null-propagating
-                        # `a != b` filter: a null endpoint must be dropped,
-                        # not crash Python's None ordering in union-find
-                        if r["a"] is not None
-                        and r["b"] is not None
-                        and r["a"] != r["b"]
-                    ],
-                    edges.sparkSession,
-                    dtype,
-                )
+    small = driver_edges(e, driver_threshold)
+    if small is not None:
+        dtype = dict(e.dtypes)["a"]  # keep numeric ids numeric (min = numeric min)
+        return _driver_union_find(small, edges.sparkSession, dtype)
 
-    e = e.where(F.col("a") != F.col("b")).distinct()
-
-    if driver_threshold > 0:
-        head = e.limit(driver_threshold + 1).collect()
-        if len(head) <= driver_threshold:
-            dtype = dict(e.dtypes)["a"]  # keep numeric ids numeric (min = numeric min)
-            return _driver_union_find([(r["a"], r["b"]) for r in head], edges.sparkSession, dtype)
-
-    e = e.localCheckpoint()
+    e = e.distinct().localCheckpoint()
 
     prev_sig = None
     for i in range(max_iter):

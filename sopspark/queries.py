@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from sopspark.functions.expr import compile_filter
 from sopspark.operators.filter_map import filter_quads, map_quads
 from sopspark.operators.transforms import dedup, merge
+from sopspark.plans.graph import DRIVER_THRESHOLD
 from sopspark.terms import LITERAL, IRI
 
 EV = "http://example.org/event/"
@@ -882,12 +883,15 @@ def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("purchase_id", "error_id")
 
 
-def q_pagerank(spark: SparkSession, sf_dir: str, *, iters: int = 10) -> DataFrame:
-    """Distributed PageRank (kg/graphalgo.py) over the bipartite
-    user↔event-type entity graph, 10 synchronous iterations with uniform
-    dangling redistribution — per iteration one edge-scan join + one
-    aggregate; the DuckDB oracle unrolls the identical iteration as a CTE
-    chain."""
+def q_pagerank(
+    spark: SparkSession, sf_dir: str, *, iters: int = 10, driver_threshold: int = DRIVER_THRESHOLD
+) -> DataFrame:
+    """PageRank (kg/graphalgo.py) over the bipartite user↔event-type
+    entity graph, 10 synchronous iterations with uniform dangling
+    redistribution — distributed, per iteration one edge-scan join + one
+    aggregate, or one NumPy step per iteration on the driver at or under
+    ``driver_threshold`` distinct edges; the DuckDB oracle unrolls the
+    identical iteration as a CTE chain."""
     from sopspark.kg.graphalgo import pagerank
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -896,7 +900,7 @@ def q_pagerank(spark: SparkSession, sf_dir: str, *, iters: int = 10) -> DataFram
         F.concat(F.lit(EV), F.col("event_type")).alias("dst"),
     )
     edges = ut.unionByName(ut.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    pr = pagerank(edges, iters=iters)
+    pr = pagerank(edges, iters=iters, driver_threshold=driver_threshold)
     return pr.select("node", F.round("rank", 6).alias("rank")).orderBy("node")
 
 
@@ -1260,13 +1264,17 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_label_propagation(spark: SparkSession, sf_dir: str, *, iters: int = 5) -> DataFrame:
+def q_label_propagation(
+    spark: SparkSession, sf_dir: str, *, iters: int = 5, driver_threshold: int = DRIVER_THRESHOLD
+) -> DataFrame:
     """Synchronous label-propagation community detection
     (kg/graphalgo.py::label_propagation, Raghavan et al. 2007) over the
     supplier co-occurrence graph (suppliers sharing an order), 5
     deterministic rounds with most-frequent-then-smallest-label updates
-    — per round one adjacency join + two map-side-combined aggregates;
-    the DuckDB oracle unrolls the identical rounds as a CTE chain."""
+    — distributed, per round one adjacency join + two map-side-combined
+    aggregates, or plain Python rounds on the driver at or under
+    ``driver_threshold`` distinct edges; the DuckDB oracle unrolls the
+    identical rounds as a CTE chain."""
     from sopspark.kg.graphalgo import label_propagation
 
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
@@ -1274,7 +1282,7 @@ def q_label_propagation(spark: SparkSession, sf_dir: str, *, iters: int = 5) -> 
     y = li.select("l_orderkey", F.col("l_suppkey").alias("dst"))
     edges = x.join(y, "l_orderkey").where(F.col("src") < F.col("dst"))
     return (
-        label_propagation(edges, iters=iters)
+        label_propagation(edges, iters=iters, driver_threshold=driver_threshold)
         .select(
             F.col("node").cast("bigint").alias("node"),
             F.col("community").cast("bigint").alias("community"),
@@ -1627,7 +1635,9 @@ def q_kcore(spark: SparkSession, sf_dir: str, *, rounds: int = 6) -> DataFrame:
     )
 
 
-def q_ppr(spark: SparkSession, sf_dir: str, *, iters: int = 10) -> DataFrame:
+def q_ppr(
+    spark: SparkSession, sf_dir: str, *, iters: int = 10, driver_threshold: int = DRIVER_THRESHOLD
+) -> DataFrame:
     """Personalized PageRank (kg/graphalgo.py::personalized_pagerank, 10
     iterations) from the first five user entities over the bipartite
     user↔event-type graph — dangling mass teleports to the sources, so
@@ -1646,7 +1656,7 @@ def q_ppr(spark: SparkSession, sf_dir: str, *, iters: int = 10) -> DataFrame:
     sources = ev.where(F.col("user_id") < 5).select(
         F.concat(F.lit(USR), F.col("user_id").cast("string")).alias("node")
     )
-    pr = personalized_pagerank(edges, sources, iters=iters)
+    pr = personalized_pagerank(edges, sources, iters=iters, driver_threshold=driver_threshold)
     return pr.select("node", F.round("rank", 6).alias("rank")).orderBy("node")
 
 

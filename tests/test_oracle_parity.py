@@ -51,10 +51,7 @@ def _rowset(cols, rows):
     return sorted(tuple(str(_norm(r[i])) for i in order) for r in rows)
 
 
-@pytest.mark.parametrize("name", sorted(entry_mod.oracle_sql().keys()))
-def test_query_matches_oracle(spark, ddb, name):
-    q = entry_mod.queries()[name]
-    sdf = q(spark, SF_DIR)
+def _assert_matches_oracle(ddb, name, sdf):
     spark_cols = sdf.columns
     spark_rows = [tuple(r) for r in sdf.collect()]
 
@@ -69,6 +66,21 @@ def test_query_matches_oracle(spark, ddb, name):
     if sr != dr:
         diffs = [(a, b) for a, b in zip(sr, dr) if a != b][:5]
         raise AssertionError(f"{name}: value mismatch, first diffs {diffs}")
+
+
+@pytest.mark.parametrize("name", sorted(entry_mod.oracle_sql().keys()))
+def test_query_matches_oracle(spark, ddb, name):
+    _assert_matches_oracle(ddb, name, entry_mod.queries()[name](spark, SF_DIR))
+
+
+@pytest.mark.parametrize("name", ["label_propagation", "pagerank", "ppr"])
+def test_distributed_graph_plan_matches_oracle(spark, ddb, name):
+    """At sf0.01 these graphs are small enough for the driver plan, so the
+    registry parity above checks that plan; this runs the same oracles
+    against the forced distributed rounds."""
+    from sopspark.queries import QUERIES
+
+    _assert_matches_oracle(ddb, name, QUERIES[name](spark, SF_DIR, driver_threshold=0))
 
 
 def test_entry_smoke(spark):

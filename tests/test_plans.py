@@ -402,7 +402,7 @@ def test_label_propagation_adjacency_prepartitioned(spark, monkeypatch):
     e = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (3, 4)], "src long, dst long"
     )
-    out = graphalgo.label_propagation(e, iters=2)
+    out = graphalgo.label_propagation(e, iters=2, driver_threshold=0)
     try:
         nodes = list(_plan_nodes(out._jdf.queryExecution().executedPlan()))
 
@@ -420,3 +420,24 @@ def test_label_propagation_adjacency_prepartitioned(spark, monkeypatch):
             assert re.match(r"hashpartitioning\(nbr#\d+L?, \d+\)", feed.outputPartitioning().toString())
     finally:
         spark.catalog.clearCache()
+
+
+def test_local_df_is_local_relation_with_declared_types(spark):
+    """local_df (the output builder of every driver-side plan) gives a
+    LocalRelation with exactly the declared schema: NULL in every column,
+    64-bit integers kept exact, awkward strings kept verbatim, and the
+    empty row list still typed."""
+    from sopspark.session import is_local, local_df
+
+    schema = "s string, d double, n bigint, i int, b boolean"
+    rows = [("it's \\ 'x'", 1.5, 2**62 + 1, 7, True), (None, None, None, None, None)]
+    df = local_df(spark, rows, schema)
+    assert is_local(df)
+    assert df.schema.simpleString() == "struct<s:string,d:double,n:bigint,i:int,b:boolean>"
+    assert all(f.nullable for f in df.schema.fields)
+    assert [tuple(r) for r in df.collect()] == rows
+    empty = local_df(spark, [], schema)
+    assert is_local(empty)
+    assert empty.schema == df.schema and empty.collect() == []
+    ranks = local_df(spark, [("a", 0.5)], "node string, rank double NOT NULL")
+    assert not ranks.schema["rank"].nullable

@@ -4,7 +4,15 @@ search, KMV distinct sketch."""
 import datetime as dt
 import math
 
+import pytest
 from pyspark.sql import functions as F
+
+# the graph algorithms' two physical plans: the driver plan (default
+# threshold, every graph here is small) and the forced distributed rounds
+PLANS = [
+    pytest.param({}, id="driver"),
+    pytest.param({"driver_threshold": 0}, id="distributed"),
+]
 
 
 def _t(s):
@@ -251,7 +259,8 @@ def test_range_join_banding_exact(spark):
     assert len(got) == len(set(got))
 
 
-def test_pagerank_closed_form_and_dangling(spark):
+@pytest.mark.parametrize("plan", PLANS)
+def test_pagerank_closed_form_and_dangling(spark, plan):
     """3-node closed form: a→b, a→c, b→c, c dangling. Σrank stays 1 and
     the 2-iteration values match a hand-rolled reference computation."""
     from sopspark.kg.graphalgo import pagerank
@@ -259,7 +268,10 @@ def test_pagerank_closed_form_and_dangling(spark):
     edges = spark.createDataFrame(
         [("a", "b"), ("a", "c"), ("b", "c")], "src string, dst string"
     )
-    got = {r["node"]: r["rank"] for r in pagerank(edges, iters=2, damping=0.85).collect()}
+    got = {
+        r["node"]: r["rank"]
+        for r in pagerank(edges, iters=2, damping=0.85, **plan).collect()
+    }
 
     # reference model
     ranks = {"a": 1 / 3, "b": 1 / 3, "c": 1 / 3}
@@ -588,7 +600,8 @@ def test_triangle_count_triangle_free(spark):
     assert set(out) == {1, 2, 3, 4} and set(out.values()) == {0}
 
 
-def test_label_propagation_matches_reference_model(spark):
+@pytest.mark.parametrize("plan", PLANS)
+def test_label_propagation_matches_reference_model(spark, plan):
     import random
     from collections import Counter
     from sopspark.kg.graphalgo import label_propagation
@@ -618,17 +631,18 @@ def test_label_propagation_matches_reference_model(spark):
         iters = rng.choice([1, 2, 5])
         df = spark.createDataFrame(edges, ["src", "dst"])
         got = {r.node: r.community
-               for r in label_propagation(df, iters=iters).collect()}
+               for r in label_propagation(df, iters=iters, **plan).collect()}
         assert got == ref_lpa(edges, iters)
 
 
-def test_label_propagation_two_cliques_bridge(spark):
+@pytest.mark.parametrize("plan", PLANS)
+def test_label_propagation_two_cliques_bridge(spark, plan):
     from sopspark.kg.graphalgo import label_propagation
 
     # two triangles joined by one bridge edge: each keeps its own community
     edges = [(1, 2), (2, 3), (1, 3), (4, 5), (5, 6), (4, 6), (3, 4)]
     df = spark.createDataFrame(edges, ["src", "dst"])
-    got = {r.node: r.community for r in label_propagation(df, iters=5).collect()}
+    got = {r.node: r.community for r in label_propagation(df, iters=5, **plan).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 4: 3, 5: 3, 6: 3}
 
 
@@ -747,7 +761,8 @@ def test_kcore_fixpoint_and_fixed_rounds(spark):
     assert empty == {}                       # no 5-core exists
 
 
-def test_ppr_all_sources_equals_pagerank(spark):
+@pytest.mark.parametrize("plan", PLANS)
+def test_ppr_all_sources_equals_pagerank(spark, plan):
     from sopspark.kg.graphalgo import pagerank, personalized_pagerank
 
     edges = spark.createDataFrame(
@@ -756,9 +771,9 @@ def test_ppr_all_sources_equals_pagerank(spark):
     nodes = (edges.select(edges.src.alias("node"))
              .unionByName(edges.select(edges.dst.alias("node"))).distinct())
     # restarting uniformly over ALL nodes IS standard PageRank
-    pr = {r.node: r.rank for r in pagerank(edges, iters=8).collect()}
+    pr = {r.node: r.rank for r in pagerank(edges, iters=8, **plan).collect()}
     ppr = {r.node: r.rank
-           for r in personalized_pagerank(edges, nodes, iters=8).collect()}
+           for r in personalized_pagerank(edges, nodes, iters=8, **plan).collect()}
     assert set(pr) == set(ppr)
     assert all(abs(pr[n] - ppr[n]) < 1e-9 for n in pr)
 
@@ -779,6 +794,114 @@ def test_ppr_mass_conserved_and_source_biased(spark):
     assert out[9] == 0.0 and out[10] == 0.0             # unreachable: exactly 0
     with pytest.raises(ValueError):
         personalized_pagerank(edges, sources.where("node > 99"))
+
+
+GRAPH_CASES = {
+    # name: (edge rows, id type, PPR sources: one on the graph, one isolated;
+    # a NULL source counts in |S| and comes out with rank 0 on both plans)
+    "empty": ([], "string", ["a", "z"]),
+    "self_loops": ([("a", "a"), ("a", "b"), ("b", "b"), ("b", "c"), ("c", "a")], "string", ["a", "z"]),
+    "null_endpoints": ([("a", "b"), ("b", None), (None, "c"), (None, None), ("c", "a"), ("c", "d")],
+                       "string", ["a", None, "z"]),
+    "duplicates": ([(1, 2), (1, 2), (2, 1), (2, 3), (2, 3), (3, 1), (4, 3)], "bigint", [1, 99]),
+    "long_ids": ([(1, 2), (2, 3), (3, 1), (3, 4), (5, 6), (10, 2)], "bigint", [2, 99]),
+    "string_ids": ([("1", "2"), ("2", "3"), ("3", "1"), ("3", "4"), ("5", "6"), ("10", "2")],
+                   "string", ["2", "99"]),
+}
+
+
+def _both_plans(run):
+    """(driver, distributed) outputs of ``run(**plan)``: dtypes and rows."""
+    out = []
+    for kw in ({}, {"driver_threshold": 0}):
+        df = run(**kw)
+        out.append((df.dtypes, [tuple(r) for r in df.collect()]))
+    return out
+
+
+def _assert_ranks_agree(driver, distributed):
+    (dt_a, rows_a), (dt_b, rows_b) = driver, distributed
+    assert dt_a == dt_b
+    a, b = dict(rows_a), dict(rows_b)
+    assert len(a) == len(rows_a) and a.keys() == b.keys()
+    assert all(abs(a[n] - b[n]) <= 1e-12 for n in a), (a, b)
+
+
+@pytest.mark.parametrize("case", sorted(GRAPH_CASES))
+def test_graph_plans_agree_on_edge_cases(spark, case):
+    """The driver and distributed plans of pagerank, personalized
+    pagerank (with an isolated source), label_propagation and
+    connected_components give the same dtypes, the same nodes, ranks equal
+    to 1e-12 and identical communities/components."""
+    from sopspark.kg.graphalgo import label_propagation, pagerank, personalized_pagerank
+    from sopspark.plans.graph import connected_components
+
+    rows, id_type, srcs = GRAPH_CASES[case]
+    edges = spark.createDataFrame(rows, f"src {id_type}, dst {id_type}")
+    sources = spark.createDataFrame([(x,) for x in srcs], f"node {id_type}")
+    pr = _both_plans(lambda **kw: pagerank(edges, iters=4, **kw))
+    _assert_ranks_agree(*pr)
+    assert dict(pr[0][0])["node"] == id_type
+    _assert_ranks_agree(
+        *_both_plans(lambda **kw: personalized_pagerank(edges, sources, iters=4, **kw))
+    )
+    for run in (
+        lambda **kw: label_propagation(edges, iters=3, **kw),
+        lambda **kw: connected_components(edges, **kw),
+    ):
+        driver, distributed = _both_plans(run)
+        assert driver[0] == distributed[0]
+        assert sorted(driver[1]) == sorted(distributed[1])
+
+
+def test_graph_plans_agree_at_zero_iterations(spark):
+    """iters=0 returns the initial state on both plans: r0 for the ranks,
+    every node its own label."""
+    from sopspark.kg.graphalgo import label_propagation, pagerank, personalized_pagerank
+
+    edges = spark.createDataFrame([(1, 2), (2, 3), (3, 1), (4, 3)], "src long, dst long")
+    sources = spark.createDataFrame([(1,), (7,)], "node long")
+    pr = _both_plans(lambda **kw: pagerank(edges, iters=0, **kw))
+    _assert_ranks_agree(*pr)
+    assert all(r == 0.25 for _n, r in pr[0][1])
+    ppr = _both_plans(lambda **kw: personalized_pagerank(edges, sources, iters=0, **kw))
+    _assert_ranks_agree(*ppr)
+    assert dict(ppr[0][1]) == {1: 0.5, 2: 0.0, 3: 0.0, 4: 0.0, 7: 0.5}
+    driver, distributed = _both_plans(lambda **kw: label_propagation(edges, iters=0, **kw))
+    assert driver[0] == distributed[0]
+    assert sorted(driver[1]) == sorted(distributed[1]) == [(1, 1), (2, 2), (3, 3), (4, 4)]
+
+
+@pytest.mark.parametrize("plan", PLANS)
+def test_ppr_empty_source_set_raises(spark, plan):
+    from sopspark.kg.graphalgo import personalized_pagerank
+
+    edges = spark.createDataFrame([(1, 2), (2, 1)], "src long, dst long")
+    with pytest.raises(ValueError, match="non-empty source set"):
+        personalized_pagerank(edges, spark.createDataFrame([], "node long"), **plan)
+
+
+def test_pagerank_small_graph_job_count(spark):
+    """A 2.5k-edge graph takes the driver plan: the edge collect plus the
+    output write schedule at most 3 Spark jobs (the distributed rounds
+    schedule ~90)."""
+    import random
+
+    from sopspark.kg.graphalgo import pagerank
+
+    rng = random.Random(5)
+    rows = [(f"n{rng.randint(0, 999)}", f"n{rng.randint(0, 999)}") for _ in range(2500)]
+    edges = spark.createDataFrame(rows, "src string, dst string").persist()
+    edges.count()
+    sc = spark.sparkContext
+    sc.setJobGroup("pagerank-small-graph", "pagerank job count")
+    try:
+        pagerank(edges).write.format("noop").mode("overwrite").save()
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(prop, None)
+        edges.unpersist()
+    assert len(sc.statusTracker().getJobIdsForGroup("pagerank-small-graph")) <= 3
 
 
 def test_retention_cohorts_closed_form(spark):
