@@ -31,7 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from sopspark.kg.vocab import AGE, KNOWS, LIVES_IN, USES_TOOL, WORKS_AT
+from sopspark.kg.vocab import AGE, KNOWS, LIVES_IN, WORKS_AT
 
 # extraction templates (compiled once per executor import)
 RE_KNOWS = re.compile(r"\b([A-Z][a-z]+) knows ([A-Z][a-z]+)\.")
@@ -173,18 +173,3 @@ def extract_triples(assembled: DataFrame) -> DataFrame:
 
     cols = ["conv_id", "turn_idx", "text", "prev_ante"]
     return assembled.select(*cols).mapInPandas(run, schema=MENTION_SCHEMA)
-
-
-def tool_triples(transcripts: DataFrame, conv_ns: str) -> DataFrame:
-    """Structured (non-text) triples from the ``tool`` column:
-    (conv IRI, ex:usesTool, tool literal). Pure Catalyst — shows the
-    columnar fast path beside the UDF text path."""
-    return (
-        transcripts.where((F.col("tool").isNotNull()) & (F.col("tool") != ""))
-        .select(
-            F.concat(F.lit(conv_ns), F.col("conv_id")).alias("s"),
-            F.lit(USES_TOOL).alias("p"),
-            F.col("tool").alias("o"),
-        )
-        .dropDuplicates()
-    )

@@ -12,9 +12,9 @@ Per iteration: one join of the edge list with the (node-sized) rank
 table + one aggregate — both shuffles keyed on node id, which AQE
 coalesces/skew-splits. The rank table is nodes-sized, so at 100 TB of
 edges the iteration cost is dominated by the edge-scan join, exactly the
-shape a Pregel implementation has. Lineage is truncated with
-``localCheckpoint`` every ``checkpoint_every`` iterations so the plan
-does not grow O(iters) deep (same idiom as the property-path closure in
+shape a Pregel implementation has. Lineage is truncated with a lazy
+``localCheckpoint`` every iteration so the plan does not grow O(iters)
+deep (same idiom as the property-path closure in
 ``functions/sparql.py``).
 
 Determinism: with a fixed iteration count the result is a closed form of
@@ -53,7 +53,6 @@ def pagerank(
     dst: str = "dst",
     iters: int = 10,
     damping: float = 0.85,
-    checkpoint_every: int = 3,
     driver_threshold: int = DRIVER_THRESHOLD,
 ) -> DataFrame:
     """Ranks after ``iters`` synchronous iterations over the DISTINCT
@@ -81,7 +80,6 @@ def pagerank(
         nodes,
         iters=iters,
         damping=damping,
-        checkpoint_every=checkpoint_every,
         driver_threshold=0,
         _assume_clean=True,  # e is already null-filtered + distinct
     )
@@ -91,8 +89,7 @@ def _driver_ppr(spark, pdf, sources, iters: int, damping: float, dtype: str) -> 
     """Driver plan of :func:`personalized_pagerank` (and, with ``sources``
     None, of :func:`pagerank`): the distributed rounds' recurrence as one
     vectorized NumPy step per round over the distinct (src, dst) edges of
-    ``pdf``. ``sources`` is the distinct source list; a NULL source counts
-    in |S| and comes out with rank 0, as on the distributed plan."""
+    ``pdf``. ``sources`` is the distinct, non-NULL source list."""
     import numpy as np
     import pandas as pd
 
@@ -101,7 +98,7 @@ def _driver_ppr(spark, pdf, sources, iters: int, damping: float, dtype: str) -> 
     m = len(pdf)
     ends = [pdf["src"], pdf["dst"]]
     if sources is not None:
-        ends.append(pd.Series([x for x in sources if x is not None], dtype=object))
+        ends.append(pd.Series(sources, dtype=object))
     codes, nodes = pd.factorize(pd.concat(ends, ignore_index=True))
     n = len(nodes)
     s_idx, d_idx = codes[:m], codes[m : 2 * m]
@@ -120,8 +117,6 @@ def _driver_ppr(spark, pdf, sources, iters: int, damping: float, dtype: str) -> 
         mass = rank[dangling].sum()
         rank = (1.0 - d) * r0 + d * (contrib + mass * r0)
     rows = list(zip(nodes.tolist(), rank.tolist()))
-    if sources is not None and None in sources:
-        rows.append((None, 0.0))
     return local_df(spark, rows, f"node {dtype}, rank double NOT NULL")
 
 
@@ -332,7 +327,6 @@ def personalized_pagerank(
     source_col: str = "node",
     iters: int = 10,
     damping: float = 0.85,
-    checkpoint_every: int = 3,
     driver_threshold: int = DRIVER_THRESHOLD,
     _assume_clean: bool = False,
 ) -> DataFrame:
@@ -370,7 +364,13 @@ def personalized_pagerank(
         # drop them like every other operator in this module; skip the
         # re-distinct when the caller (pagerank) already did both
         e = e.where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-    s = sources.select(F.col(source_col).alias("node")).distinct()
+    # a NULL source is no node: dropping it keeps Σrank = 1, and a source
+    # set of NULLs only is as empty as no sources at all
+    s = (
+        sources.select(F.col(source_col).alias("node"))
+        .where(F.col("node").isNotNull())
+        .distinct()
+    )
     # the node set INCLUDES isolated sources (a source absent from the
     # edge list still receives restart mass — without the union its r0
     # would silently vanish and Σrank would deflate below 1)
@@ -459,7 +459,7 @@ def personalized_pagerank_oracle_sql(
     d = float(damping)
     sql = f"""
     WITH e AS MATERIALIZED (SELECT DISTINCT src, dst FROM ({edges_sql})),
-    s AS MATERIALIZED (SELECT DISTINCT node FROM ({sources_sql})),
+    s AS MATERIALIZED (SELECT DISTINCT node FROM ({sources_sql}) WHERE node IS NOT NULL),
     nodes AS MATERIALIZED (
       SELECT src AS node FROM e UNION SELECT dst FROM e UNION SELECT node FROM s
     ),
@@ -987,7 +987,6 @@ def strongly_connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 100,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """Strongly connected components of a directed graph: ``(node, scc)``
     with ``scc`` the minimum node id of the component, for every edge
@@ -1012,9 +1011,9 @@ def strongly_connected_components(
     Worst case is a reversed-id path (O(n) peels — the known weakness of
     coloring SCC; trim absorbs the common DAG case), typical corpus
     graphs finish in a handful of peels. Every fixpoint round is one
-    narrow equi-join + one map-side-combined aggregate with
-    ``localCheckpoint`` lineage truncation every ``checkpoint_every``
-    rounds; per-phase state is a node-sized table. Deterministic: the
+    narrow equi-join + one map-side-combined aggregate with lazy
+    ``localCheckpoint`` lineage truncation every round; per-phase state
+    is a node-sized table. Deterministic: the
     result is a closed form of the edge set. The DuckDB twin
     (:func:`scc_oracle_sql`) is an INDEPENDENT formulation — brute-force
     mutual reachability over a recursive closure — so parity
@@ -1082,11 +1081,10 @@ def strongly_connected_components(
                 ),
             )
             rounds += 1
-            # every round, not every checkpoint_every: color_{i+1}
-            # references color_i TWICE (succ join + direct), so an
-            # untruncated window doubles the subtree per round — the HITS
-            # plan-doubling shape; the lazy checkpoint materializes with
-            # the signature job anyway
+            # every round: color_{i+1} references color_i TWICE (succ
+            # join + direct), so an untruncated window doubles the subtree
+            # per round — the HITS plan-doubling shape; the lazy checkpoint
+            # materializes with the signature job anyway
             color = color.localCheckpoint(eager=False)
             sig = _sig(color, "node", "color")
             if sig == prev:

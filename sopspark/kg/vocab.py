@@ -9,7 +9,6 @@ KNOWS = FOAF + "knows"
 WORKS_AT = EX + "vocab/worksAt"
 LIVES_IN = EX + "vocab/livesIn"
 AGE = EX + "vocab/age"
-USES_TOOL = EX + "vocab/usesTool"
 SAME_AS = OWL + "sameAs"
 
 PERSON_NS = EX + "person/"

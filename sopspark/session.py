@@ -17,7 +17,7 @@ from pyspark.sql import SparkSession
 def _package_zip() -> str:
     """Zip the sopspark package for shipment to executors — the programmatic
     twin of ``spark-submit --py-files sopspark.zip`` (north_rule deploy mode).
-    Cached per process."""
+    Rebuilt on every call, over the same path in the temp directory."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     out = os.path.join(tempfile.gettempdir(), "sopspark_pyfiles.zip")
     with zipfile.ZipFile(out, "w") as zf:
@@ -105,8 +105,7 @@ def get_spark(
         # 64k-row Arrow batches amortize per-batch serialization overhead in
         # the pandas-UDF extraction path (~+10-25% KG throughput at local[4],
         # measured interleaved vs the 10k default; won every trial). Text
-        # rows are small, so a batch stays ~tens of MB; binary-heavy
-        # pipelines (multimodal decode) should LOWER this per session.
+        # rows are small, so a batch stays ~tens of MB.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")

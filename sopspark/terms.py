@@ -94,33 +94,11 @@ def iri_col(value: Column | str) -> Column:
     return _term_struct(F.lit(IRI), v, F.lit(None).cast("string"), F.lit(None).cast("string"))
 
 
-def bnode_col(label: Column | str) -> Column:
-    v = F.lit(label) if isinstance(label, str) else label
-    return _term_struct(F.lit(BNODE), v, F.lit(None).cast("string"), F.lit(None).cast("string"))
-
-
 def quoted_col(encoding: Column | str) -> Column:
     """RDF-star quoted-triple term from its canonical NT ``<< ... >>``
     encoding."""
     v = F.lit(encoding) if isinstance(encoding, str) else encoding
     return _term_struct(F.lit(QUOTED), v, F.lit(None).cast("string"), F.lit(None).cast("string"))
-
-
-def literal_col(
-    lex: Column | str,
-    dt: Column | str | None = None,
-    lang: Column | str | None = None,
-) -> Column:
-    v = F.lit(lex) if isinstance(lex, str) else lex
-    d = F.lit(dt) if isinstance(dt, (str, type(None))) else dt
-    la = F.lit(lang) if isinstance(lang, (str, type(None))) else lang
-    # normalize: xsd:string → NULL dt; langString implied by lang tag
-    d = F.when(d == F.lit(XSD_STRING), F.lit(None).cast("string")).otherwise(d)
-    return _term_struct(F.lit(LITERAL), v, d, la)
-
-
-def null_term() -> Column:
-    return F.lit(None).cast(TERM_TYPE)
 
 
 # ---------------------------------------------------------------------------
@@ -170,10 +148,6 @@ def nq_line(s: Column, p: Column, o: Column, g: Column) -> Column:
         F.when(g.isNotNull(), F.concat(F.lit(" "), nt_term(g))).otherwise(F.lit("")),
         F.lit(" ."),
     )
-
-
-def with_nq_line(df, col_name: str = "line"):
-    return df.withColumn(col_name, nq_line(F.col("s"), F.col("p"), F.col("o"), F.col("g")))
 
 
 # ---------------------------------------------------------------------------

@@ -1,0 +1,51 @@
+"""Package layout guards (no Spark)."""
+
+import ast
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parent.parent
+ENTRY_POINTS = [
+    "bench.py",
+    "scaling_bench.py",
+    "linearity_bench.py",
+    "sopspark/__main__.py",
+    "sopspark/cli.py",
+    "sopspark/kg/submit.py",
+]
+
+
+def _module_name(path: Path) -> str:
+    parts = path.relative_to(ROOT).with_suffix("").parts
+    return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+
+def _imported_names(path: Path) -> set[str]:
+    """Every dotted name that ``path`` imports, lazy in-function imports
+    included, with ``from x import y`` giving both ``x`` and ``x.y`` (the
+    package uses absolute imports only)."""
+    names = set()
+    for node in ast.walk(ast.parse(path.read_text(), str(path))):
+        if isinstance(node, ast.Import):
+            names.update(a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            names.add(node.module)
+            names.update(f"{node.module}.{a.name}" for a in node.names)
+    return names
+
+
+def test_every_module_is_reached():
+    """Every ``sopspark`` module is imported, directly or transitively,
+    from an entry point: code that only its own tests reach is dead."""
+    modules = {_module_name(p): p for p in (ROOT / "sopspark").rglob("*.py")}
+    reached, todo = set(), [ROOT / p for p in ENTRY_POINTS]
+    while todo:
+        for name in _imported_names(todo.pop()):
+            parts = name.split(".")
+            for i in range(1, len(parts) + 1):  # importing a.b.c runs a and a.b
+                prefix = ".".join(parts[:i])
+                if prefix in modules and prefix not in reached:
+                    reached.add(prefix)
+                    todo.append(modules[prefix])
+    reached.update(_module_name(ROOT / p) for p in ENTRY_POINTS)
+    unreached = sorted(set(modules) - reached)
+    assert not unreached, f"no entry point imports {unreached}"

@@ -798,7 +798,7 @@ def test_ppr_mass_conserved_and_source_biased(spark):
 
 GRAPH_CASES = {
     # name: (edge rows, id type, PPR sources: one on the graph, one isolated;
-    # a NULL source counts in |S| and comes out with rank 0 on both plans)
+    # a NULL source is dropped on both plans)
     "empty": ([], "string", ["a", "z"]),
     "self_loops": ([("a", "a"), ("a", "b"), ("b", "b"), ("b", "c"), ("c", "a")], "string", ["a", "z"]),
     "null_endpoints": ([("a", "b"), ("b", None), (None, "c"), (None, None), ("c", "a"), ("c", "d")],
@@ -842,9 +842,10 @@ def test_graph_plans_agree_on_edge_cases(spark, case):
     pr = _both_plans(lambda **kw: pagerank(edges, iters=4, **kw))
     _assert_ranks_agree(*pr)
     assert dict(pr[0][0])["node"] == id_type
-    _assert_ranks_agree(
-        *_both_plans(lambda **kw: personalized_pagerank(edges, sources, iters=4, **kw))
-    )
+    ppr = _both_plans(lambda **kw: personalized_pagerank(edges, sources, iters=4, **kw))
+    _assert_ranks_agree(*ppr)
+    ranks = dict(ppr[0][1])
+    assert None not in ranks and abs(sum(ranks.values()) - 1.0) < 1e-9
     for run in (
         lambda **kw: label_propagation(edges, iters=3, **kw),
         lambda **kw: connected_components(edges, **kw),
@@ -877,8 +878,34 @@ def test_ppr_empty_source_set_raises(spark, plan):
     from sopspark.kg.graphalgo import personalized_pagerank
 
     edges = spark.createDataFrame([(1, 2), (2, 1)], "src long, dst long")
-    with pytest.raises(ValueError, match="non-empty source set"):
-        personalized_pagerank(edges, spark.createDataFrame([], "node long"), **plan)
+    for rows in ([], [(None,)]):  # a NULL-only source set is empty too
+        with pytest.raises(ValueError, match="non-empty source set"):
+            personalized_pagerank(edges, spark.createDataFrame(rows, "node long"), **plan)
+
+
+@pytest.mark.parametrize("plan", PLANS)
+def test_graph_null_endpoints_dropped_both_paths(spark, plan):
+    """Null endpoints: connected_components must drop them on both plans
+    (no Python None-comparison crash on the driver), and pagerank must
+    neither emit a NULL node nor leak rank mass."""
+    from sopspark.kg.graphalgo import pagerank
+    from sopspark.plans.graph import connected_components
+    from sopspark.session import local_df
+
+    edges = local_df(
+        spark,
+        [("a", "b"), ("b", None), (None, "c"), ("c", "c"), ("c", "d")],
+        "a string, b string",
+    )
+    cc = {(r["node"], r["rep"]) for r in connected_components(edges, **plan).collect()}
+    assert cc == {("a", "a"), ("b", "a"), ("c", "c"), ("d", "c")}
+
+    pr_edges = spark.createDataFrame(
+        [("a", "b"), ("b", "a"), ("b", None), (None, "a")], "src string, dst string"
+    )
+    ranks = pagerank(pr_edges, iters=5, **plan).collect()
+    assert all(r["node"] is not None for r in ranks)
+    assert abs(sum(r["rank"] for r in ranks) - 1.0) < 1e-9
 
 
 def test_pagerank_small_graph_job_count(spark):

@@ -1,9 +1,8 @@
-"""Dedup / similarity / text-analysis / multimodal plumbing tests."""
+"""Dedup / similarity / text-analysis tests."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from sopspark.multimodal import extract_features, sample_frames, synth_assets
 from sopspark.text.analysis import detect_language, fingerprint, quality_score, token_counts
 from sopspark.text.dedup import (
     exact_dedup,
@@ -129,29 +128,6 @@ def test_cosine_topk_exact_vs_lsh(spark):
     assert total > 0 and hits / max(total, 1) > 0.3
 
 
-def test_multimodal_plumbing(spark):
-    assets = synth_assets(spark, n=30)
-    feats = extract_features(assets, feat_dim=16, fake=True)
-    rows = feats.collect()
-    assert len(rows) == 30
-    ok = [r for r in rows if r.err is None]
-    assert all(len(r.feature) == 16 for r in ok)
-    # deterministic: same payload → same feature
-    f2 = {r.asset_id: tuple(r.feature) for r in extract_features(assets, fake=True).collect()}
-    f1 = {r.asset_id: tuple(r.feature) for r in rows}
-    assert f1 == f2
-
-    frames = sample_frames(assets, every_ms=1000, fake=True)
-    fr = frames.collect()
-    assert len(fr) > 10
-    assert all(r.err is None for r in fr)
-    # real decode path is stubbed
-    with pytest.raises(NotImplementedError):
-        from sopspark.multimodal import decode_image
-
-        decode_image(b"not an image", fake=False)
-
-
 def test_simhash_hamming_pairs_matches_bruteforce(spark, docs):
     from sopspark.text.dedup import simhash_hamming_pairs, simhash_near_dup_pairs
 
@@ -239,462 +215,6 @@ def test_curate_documents_closed_form(spark):
     r = got[0]
     assert r.doc_id == 3 and r.lang_pred == "en" and r.dup_count == 2
     assert r.quality >= 0.75 and r.ws_tokens == 16
-
-
-def test_png_codec_roundtrip_and_filters():
-    """Real pure-python PNG codec (round-2 stub retired for PNG): RGB
-    round-trip, every scanline filter type, gray / palette / RGBA color
-    types, corrupt-input quarantine."""
-    import zlib
-
-    import numpy as np
-
-    from sopspark.multimodal import PNG_SIG, decode_image, decode_png, encode_png
-
-    rng = np.random.default_rng(7)
-    img = rng.integers(0, 256, size=(11, 5, 3), dtype=np.uint8)
-    assert np.array_equal(decode_png(encode_png(img)), img)
-    # decode_image dispatches PNGs to the real decoder even with fake=False
-    assert np.array_equal(decode_image(encode_png(img), fake=False), img)
-
-    def mk(w, h, ctype, scanlines, plte=None):
-        def chunk(typ, body):
-            return len(body).to_bytes(4, "big") + typ + body + zlib.crc32(typ + body).to_bytes(4, "big")
-
-        ihdr = w.to_bytes(4, "big") + h.to_bytes(4, "big") + bytes([8, ctype, 0, 0, 0])
-        out = PNG_SIG + chunk(b"IHDR", ihdr)
-        if plte is not None:
-            out += chunk(b"PLTE", plte)
-        return out + chunk(b"IDAT", zlib.compress(b"".join(scanlines))) + chunk(b"IEND", b"")
-
-    # filters 1 (Sub), 2 (Up), 3 (Average), 4 (Paeth) on a 3x3 gray image
-    # whose reconstructed rows are all [10, 20, 30]
-    rows_recon = [10, 20, 30]
-    sub = bytes([1, 10, 10, 10])                # each = prev_left + 10
-    up = bytes([2, 0, 0, 0])                    # same as row above
-    avg = bytes([3]) + bytes([(rows_recon[x] - ((rows_recon[x - 1] if x else 0) + rows_recon[x]) // 2) & 0xFF for x in range(3)])
-    pae = bytes([4] + [0, 0, 0])                # paeth predicts row above
-    png = mk(3, 4, 0, [sub, up, avg, pae])
-    got = decode_png(png)
-    assert got.shape == (4, 3, 3)
-    assert all(np.array_equal(got[y, :, 0], rows_recon) for y in range(4))
-    assert np.array_equal(got[..., 0], got[..., 2])  # gray replicated
-
-    # palette
-    plte = bytes([255, 0, 0, 0, 255, 0])
-    ppng = mk(2, 1, 3, [bytes([0, 0, 1])], plte=plte)
-    assert np.array_equal(decode_png(ppng), [[[255, 0, 0], [0, 255, 0]]])
-    # RGBA drops alpha
-    apng = mk(1, 1, 6, [bytes([0, 9, 8, 7, 255])])
-    assert np.array_equal(decode_png(apng), [[[9, 8, 7]]])
-    # corrupt input raises ValueError (caught by the err channel upstream)
-    import pytest
-
-    with pytest.raises(ValueError):
-        decode_png(PNG_SIG + b"garbage")
-
-
-def test_extract_features_real_png(spark):
-    """synth_assets now carries REAL PNG payloads for images; the feature
-    UDF decodes them for real (fake=False) end to end."""
-    import numpy as np
-
-    from sopspark.multimodal import extract_features, synth_assets
-
-    assets = synth_assets(spark, n=9).where("modality = 'image'")
-    feats = extract_features(assets, feat_dim=16, fake=False).collect()
-    assert feats and all(r.err is None and len(r.feature) == 16 for r in feats)
-    # deterministic: same synth seed → same features
-    again = extract_features(synth_assets(spark, n=9).where("modality = 'image'"), feat_dim=16, fake=False).collect()
-    assert {r.asset_id: tuple(r.feature) for r in feats} == {r.asset_id: tuple(r.feature) for r in again}
-
-
-def test_jpeg_codec_roundtrip_profiles():
-    """Baseline JPEG codec (sopspark/jpegcodec.py): encode→decode round
-    trips within lossy tolerance across quality levels, 4:2:0 subsampling,
-    restart intervals, and grayscale — all on spec-conformant JFIF bytes
-    (SOI/APP0/DQT/SOF0/DHT/[DRI]/SOS/EOI with canonical Huffman tables)."""
-    import numpy as np
-
-    from sopspark.jpegcodec import decode_jpeg, encode_jpeg
-
-    rng = np.random.default_rng(7)
-    h, w = 41, 53  # deliberately not multiples of 8/16 (edge-block crop)
-    yy, xx = np.mgrid[0:h, 0:w].astype(np.float64)
-    img = np.stack(
-        [
-            128 + 100 * np.sin(xx / 17),
-            60 + 2.2 * yy,
-            200 - 1.5 * xx + 10 * np.cos(yy / 9),
-        ],
-        axis=-1,
-    )
-    img = np.clip(img + rng.normal(0, 2, img.shape), 0, 255).astype(np.uint8)
-
-    for q, sub, dri, tol in [
-        (95, False, 0, 12),
-        (85, True, 0, 20),
-        (90, False, 4, 14),
-        (70, True, 3, 28),
-    ]:
-        data = encode_jpeg(img, quality=q, subsample=sub, restart_interval=dri)
-        assert data[:3] == b"\xff\xd8\xff" and data[-2:] == b"\xff\xd9"
-        out = decode_jpeg(data)
-        assert out.shape == (h, w, 3) and out.dtype == np.uint8
-        err = np.abs(out.astype(int) - img.astype(int))
-        assert err.max() <= tol, (q, sub, dri, err.max())
-        assert err.mean() <= 5.0, (q, sub, dri, err.mean())
-
-    # grayscale single-component scan → replicated RGB
-    g = (xx * 2 + yy).clip(0, 255).astype(np.uint8)
-    og = decode_jpeg(encode_jpeg(g, quality=92))
-    assert og.shape == (h, w, 3)
-    assert (og[..., 0] == og[..., 1]).all() and (og[..., 1] == og[..., 2]).all()
-    assert np.abs(og[..., 0].astype(int) - g.astype(int)).max() <= 4
-
-    # determinism: same input → identical bytes and identical pixels
-    assert encode_jpeg(img, quality=85) == encode_jpeg(img, quality=85)
-
-
-def _jpeg_test_image(h=41, w=53):
-    import numpy as np
-
-    rng = np.random.default_rng(7)
-    yy, xx = np.mgrid[0:h, 0:w].astype(np.float64)
-    img = np.stack(
-        [128 + 100 * np.sin(xx / 17), 60 + 2.2 * yy, 200 - 1.5 * xx],
-        axis=-1,
-    )
-    return np.clip(img + rng.normal(0, 2, img.shape), 0, 255).astype(np.uint8)
-
-
-def test_jpeg_progressive_decodes_pixel_identical_to_baseline():
-    """SOF2 scans carry the same quantized coefficients as the SOF0 stream
-    for the same input/tables — the progressive decode must reproduce the
-    baseline decode EXACTLY, across spectral-selection-only and
-    successive-approximation scan scripts, 4:4:4 and 4:2:0, and grayscale
-    (the non-interleaved single-component DC/AC path)."""
-    import numpy as np
-
-    from sopspark.jpegcodec import decode_jpeg, encode_jpeg
-
-    img = _jpeg_test_image()
-    for sub in (False, True):
-        base = decode_jpeg(encode_jpeg(img, quality=85, subsample=sub))
-        for succ in (False, True):
-            data = encode_jpeg(
-                img, quality=85, subsample=sub, progressive=True,
-                successive=succ,
-            )
-            assert data.find(b"\xff\xc2") > 0 and data.count(b"\xff\xda") >= 4
-            out = decode_jpeg(data)
-            assert (out == base).all(), (sub, succ)
-
-    g = np.clip(_jpeg_test_image()[:, :, 0], 0, 255)
-    bg = decode_jpeg(encode_jpeg(g, quality=92))
-    for succ in (False, True):
-        pg = decode_jpeg(
-            encode_jpeg(g, quality=92, progressive=True, successive=succ)
-        )
-        assert (pg == bg).all(), succ
-
-
-def test_jpeg_progressive_truncated_stream_renders_partial():
-    """Progressive's point: a stream cut after the DC scan still renders
-    (DC-only preview), rather than erroring."""
-    import numpy as np
-
-    from sopspark.jpegcodec import decode_jpeg, encode_jpeg
-
-    img = _jpeg_test_image(24, 32)
-    data = encode_jpeg(img, quality=85, progressive=True)
-    # cut just before the SECOND SOS (after the complete DC scan)
-    cut = data.find(b"\xff\xda", data.find(b"\xff\xda") + 2)
-    out = decode_jpeg(data[:cut])
-    assert out.shape == img.shape and out.dtype == np.uint8
-    # DC-only ≈ 8x8 block means: right ballpark, not equal to full decode
-    assert abs(float(out.mean()) - float(img.mean())) < 16
-
-
-def test_jpeg_ac_refinement_hand_traced_bitstream():
-    """Bit-level oracle for the G.1.2.3 AC refinement walk, independent of
-    the encoder: prior-pass state coef[1]=4 (history of a true 5, Al=1),
-    coef[3] newly −1 this pass. Hand-traced stream for band [1,63], Al=0:
-    symbol 0x11 (skip 1 zero-history, place ±1) + sign bit 0 (negative) +
-    correction bit 1 for coef[1] (5 & 1), then EOB (0x00) with no trailing
-    correction bits. Decoder must land coef[1]=5, coef[3]=−1."""
-    import numpy as np
-
-    from sopspark.jpegcodec import (
-        _ac_refine,
-        _BitReader,
-        _canonical_codes,
-        _HuffDecoder,
-        _simple_huff,
-    )
-
-    ac_syms = [0x00, 0xF0] + [(r << 4) | s for r in range(16) for s in range(1, 11)]
-    counts, vals = _simple_huff(ac_syms)
-    codes = _canonical_codes(counts, vals)
-    dec = _HuffDecoder(counts, vals)
-
-    bits = []
-    for sym in (0x11,):
-        code, ln = codes[sym]
-        bits += [(code >> (ln - 1 - i)) & 1 for i in range(ln)]
-    bits += [0]  # sign: negative
-    bits += [1]  # correction bit for coef[1] (magnitude 5, bit0 = 1)
-    code, ln = codes[0x00]  # EOB for the rest of the band
-    bits += [(code >> (ln - 1 - i)) & 1 for i in range(ln)]
-    while len(bits) % 8:
-        bits.append(1)  # pad with 1s per spec
-    payload = bytes(
-        int("".join(map(str, bits[i : i + 8])), 2) for i in range(0, len(bits), 8)
-    )
-
-    coef = np.zeros(64, dtype=np.int32)
-    coef[1] = 4  # (5 >> 1) << 1 from the Al=1 first pass
-    r = _BitReader(payload + b"\xff\xd9", 0)
-    eobrun = _ac_refine(r, coef, dec, 1, 63, 0, 0)
-    assert eobrun == 0
-    assert coef[1] == 5 and coef[3] == -1
-    assert not coef[[0, 2]].any() and not coef[4:].any()
-
-
-def test_jpeg_single_component_scan_ignores_sampling_factors():
-    """T.81 A.2: a 1-component scan is NON-interleaved — MCU = one data
-    unit, declared sampling factors ignored. A legal grayscale baseline
-    JPEG declaring 2x2 factors must decode pixel-identically to the same
-    stream declaring 1x1 (previously: 'invalid Huffman code' on 24x8, or
-    silently wrong block order on 16-aligned geometries)."""
-    import numpy as np
-
-    from sopspark.jpegcodec import decode_jpeg, encode_jpeg
-
-    for h, w in [(24, 8), (32, 16)]:  # non-aligned crash case + aligned case
-        yy, xx = np.mgrid[0:h, 0:w]
-        g = ((xx * 11 + yy * 7) % 256).astype(np.uint8)
-        data = bytearray(encode_jpeg(g, quality=90))
-        i = data.find(b"\xff\xc0")
-        assert data[i + 11] == 0x11  # SOF0 body: prec h h w w ncomp cid HV tq
-        ref = decode_jpeg(bytes(data))
-        data[i + 11] = 0x22  # declare 2x2 factors on the only component
-        out = decode_jpeg(bytes(data))
-        assert (out == ref).all(), (h, w)
-
-
-def test_jpeg_ff_fill_bytes_before_marker():
-    """T.81 B.1.1.2: any run of 0xFF fill bytes may pad a marker — an
-    'FF FF <marker>' sequence must not be read as marker 0xFF (which
-    desyncs the segment-length parse)."""
-    import numpy as np
-
-    from sopspark.jpegcodec import decode_jpeg, encode_jpeg
-
-    img = ((np.mgrid[0:16, 0:24][0] * 9) % 256).astype(np.uint8)
-    src = encode_jpeg(img, quality=88)
-    ref = decode_jpeg(src)
-    # pad the first post-SOI marker and the SOF0 marker with fill bytes
-    i = src.find(b"\xff\xc0")
-    padded = src[:2] + b"\xff\xff" + src[2:i] + b"\xff" + src[i:]
-    assert (decode_jpeg(padded) == ref).all()
-
-
-def test_jpeg_codec_rejects_unsupported_profiles():
-    import struct
-
-    import numpy as np
-    import pytest
-
-    from sopspark.jpegcodec import decode_jpeg, encode_jpeg
-
-    with pytest.raises(ValueError, match="SOI"):
-        decode_jpeg(b"not a jpeg")
-
-    # arithmetic-coded (SOF9) is the declared boundary (progressive/SOF2
-    # decodes for real since round 5)
-    img = np.zeros((16, 16, 3), dtype=np.uint8)
-    data = bytearray(encode_jpeg(img))
-    i = data.find(b"\xff\xc0")
-    data[i + 1] = 0xC9
-    with pytest.raises(ValueError, match="coding process"):
-        decode_jpeg(bytes(data))
-
-    # a baseline full-band scan header under an SOF2 frame is malformed
-    # (progressive DC scans require Se=0) — must error, not mis-decode
-    data[i + 1] = 0xC2
-    with pytest.raises(ValueError, match="spectral band"):
-        decode_jpeg(bytes(data))
-
-    # truncated entropy stream → ValueError/IndexError quarantined upstream
-    whole = encode_jpeg(img)
-    with pytest.raises(Exception):
-        decode_jpeg(whole[: len(whole) // 2] + b"\xff\xd9")
-
-    # 16-bit (Pq=1) quantization tables parse (decoder-only path)
-    src = encode_jpeg(img, quality=90)
-    i = src.find(b"\xff\xdb")
-    seglen = struct.unpack(">H", src[i + 2 : i + 4])[0]
-    body = src[i + 4 : i + 2 + seglen]
-    tq = body[0] & 0x0F
-    wide = bytes([0x10 | tq]) + b"".join(
-        struct.pack(">H", b) for b in body[1:65]
-    )
-    patched = (
-        src[:i]
-        + b"\xff\xdb"
-        + struct.pack(">H", len(wide) + 2)
-        + wide
-        + src[i + 2 + seglen :]
-    )
-    assert decode_jpeg(patched).shape == (16, 16, 3)
-
-
-def test_extract_features_real_jpeg(spark):
-    """synth_assets rotates PNG / baseline JPEG / progressive JPEG image
-    payloads; the feature UDF decodes ALL THREE for real (fake=False) end
-    to end."""
-    from sopspark.multimodal import extract_features, synth_assets
-
-    assets = synth_assets(spark, n=36).where("modality = 'image'")
-    mimes = {r.mime for r in assets.select("mime").distinct().collect()}
-    assert mimes == {"image/png", "image/jpeg"}
-    payloads = [bytes(r.payload) for r in assets.select("payload").collect()]
-    assert any(b"\xff\xc2" in p[:200] for p in payloads)  # SOF2 present
-    assert any(b"\xff\xc0" in p[:200] for p in payloads)  # SOF0 present
-    feats = extract_features(assets, feat_dim=16, fake=False).collect()
-    assert feats and all(r.err is None and len(r.feature) == 16 for r in feats)
-
-
-def test_wav_codec_roundtrip_and_formats():
-    """decode_wav is a real stdlib-only codec: 16-bit round-trip is
-    near-lossless, 8/32-bit and float32 variants decode, stereo averages
-    to mono, and junk quarantines with ValueError."""
-    import numpy as np
-    import pytest
-
-    from sopspark.multimodal import decode_wav, encode_wav
-
-    t = np.arange(800, dtype=np.float32) / 8000.0
-    x = 0.5 * np.sin(2 * np.pi * 440.0 * t)
-    rate, back = decode_wav(encode_wav(x, rate=8000))
-    assert rate == 8000 and back.shape == x.shape
-    assert float(np.max(np.abs(back - x))) < 1e-4  # 16-bit quantization
-
-    # stereo int16: L=+0.5, R=-0.5 → mono mean ≈ 0
-    pcm = np.empty(200, dtype="<i2")
-    pcm[0::2], pcm[1::2] = 16384, -16384
-    fmt = (1).to_bytes(2, "little") + (2).to_bytes(2, "little") \
-        + (8000).to_bytes(4, "little") + (32000).to_bytes(4, "little") \
-        + (4).to_bytes(2, "little") + (16).to_bytes(2, "little")
-    body = (b"WAVE" + b"fmt " + len(fmt).to_bytes(4, "little") + fmt
-            + b"data" + len(pcm.tobytes()).to_bytes(4, "little") + pcm.tobytes())
-    rate2, mono = decode_wav(b"RIFF" + len(body).to_bytes(4, "little") + body)
-    assert rate2 == 8000 and mono.size == 100
-    assert float(np.max(np.abs(mono))) < 1e-4
-
-    # float32 format (audio_fmt=3)
-    f32 = x.astype("<f4").tobytes()
-    fmtf = (3).to_bytes(2, "little") + (1).to_bytes(2, "little") \
-        + (8000).to_bytes(4, "little") + (32000).to_bytes(4, "little") \
-        + (4).to_bytes(2, "little") + (32).to_bytes(2, "little")
-    bodyf = (b"WAVE" + b"fmt " + len(fmtf).to_bytes(4, "little") + fmtf
-             + b"data" + len(f32).to_bytes(4, "little") + f32)
-    _, xf = decode_wav(b"RIFF" + len(bodyf).to_bytes(4, "little") + bodyf)
-    assert np.allclose(xf, x)
-
-    with pytest.raises(ValueError):
-        decode_wav(b"not a wav at all")
-
-
-def test_extract_audio_features_real_wav(spark):
-    """synth_assets carries REAL WAV payloads for audio; the acoustic
-    feature UDF decodes them distributed with no fake fallback."""
-    from sopspark.multimodal import extract_audio_features, synth_assets
-
-    assets = synth_assets(spark, n=12)
-    feats = extract_audio_features(assets, n_bands=8).collect()
-    assert feats and all(r.err is None for r in feats)
-    for r in feats:
-        assert r.sample_rate == 16000 and r.duration_ms == 100
-        assert 0.3 < r.rms < 0.4 and r.peak <= 0.5001  # 0.5 sine → rms ~0.354
-        assert len(r.bands) == 8 and r.zcr > 0
-    # different synth tones → different dominant bands between assets
-    sigs = {tuple(round(b, 3) for b in r.bands) for r in feats}
-    assert len(sigs) > 1
-
-
-def test_apng_roundtrip_and_frame_sampling(spark):
-    """APNG frames decode FOR REAL: encode 3 full-canvas frames, extract
-    them distributed via sample_frames, and verify each emitted
-    frame_payload is a standalone PNG whose pixels match the source."""
-    import numpy as np
-
-    from sopspark.multimodal import (
-        ASSET_SCHEMA,
-        decode_apng_frames,
-        decode_png,
-        encode_apng,
-        sample_frames,
-    )
-
-    rng = np.random.default_rng(5)
-    frames = [rng.integers(0, 256, size=(6, 6, 3), dtype=np.uint8) for _ in range(3)]
-    apng = encode_apng(frames, delay_ms=100)
-
-    # local: 3 frames, pixel-exact
-    local = decode_apng_frames(apng)
-    assert len(local) == 3
-    for (delay, png), src in zip(local, frames):
-        assert delay == 100
-        assert np.array_equal(decode_png(png), src)
-
-    # distributed: sample every 100 ms → one row per frame, real payloads
-    assets = spark.createDataFrame(
-        [(1, "video", bytearray(apng), "image/apng", None, None, 300, None)],
-        ASSET_SCHEMA,
-    )
-    rows = sample_frames(assets, every_ms=100, fake=False).orderBy("frame_idx").collect()
-    assert [r.frame_idx for r in rows] == [0, 1, 2]
-    assert all(r.err is None for r in rows)
-    for r, src in zip(rows, frames):
-        assert np.array_equal(decode_png(bytes(r.frame_payload)), src)
-
-    # unsupported profile (blend OVER) quarantines, does not kill the job
-    bad = bytearray(apng)
-    i = bytes(bad).find(b"fcTL")
-    blend_off = i + 4 + 25  # chunk body offset 25 = blend_op
-    bad[blend_off] = 1
-    # fix the CRC so chunk parsing still works
-    import zlib
-
-    body = bytes(bad[i + 4 : i + 4 + 26])
-    crc = zlib.crc32(body).to_bytes(4, "big")
-    bad[i + 4 + 26 : i + 4 + 30] = crc
-    assets_bad = spark.createDataFrame(
-        [(2, "video", bad, "image/apng", None, None, 300, None)], ASSET_SCHEMA
-    )
-    rows_bad = sample_frames(assets_bad, every_ms=100, fake=False).collect()
-    assert len(rows_bad) == 1 and "blend OVER" in rows_bad[0].err
-
-
-def test_apng_malformed_layouts_raise_valueerror():
-    """Review fix: hostile chunk layouts raise the documented ValueError,
-    not TypeError/IndexError."""
-    import pytest
-
-    from sopspark.multimodal import PNG_SIG, _chunk, decode_apng_frames
-
-    # fcTL before IHDR
-    bad1 = PNG_SIG + _chunk(b"fcTL", b"\x00" * 26) + _chunk(b"IEND", b"")
-    with pytest.raises(ValueError, match="before IHDR"):
-        decode_apng_frames(bad1)
-
-    # truncated fcTL
-    ihdr = (4).to_bytes(4, "big") + (4).to_bytes(4, "big") + bytes([8, 2, 0, 0, 0])
-    bad2 = PNG_SIG + _chunk(b"IHDR", ihdr) + _chunk(b"fcTL", b"\x00" * 10) + _chunk(b"IEND", b"")
-    with pytest.raises(ValueError, match="truncated fcTL"):
-        decode_apng_frames(bad2)
 
 
 def test_semdedup_closed_form(spark):
@@ -1204,45 +724,6 @@ def test_pq_assign_m1_equals_kmeans_and_properties(spark):
 
     with _pytest.raises(ValueError):
         pq_assign(emb, m=7)
-
-
-def test_decode_jpeg_rejects_unsupported_precision_and_sampling():
-    """Legal-but-unsupported baseline variants must raise (err-channel
-    boundary), not decode to silently corrupted pixels: 12-bit SOF
-    precision and non-dividing sampling factors."""
-    import numpy as np
-    import pytest as _pytest
-
-    from sopspark.jpegcodec import decode_jpeg, encode_jpeg
-
-    rng = np.random.RandomState(3)
-    img = rng.randint(0, 256, (16, 16, 3), dtype=np.uint8)
-    data = bytearray(encode_jpeg(img, quality=90, subsample="420"))
-
-    def sof_off(b: bytes) -> int:
-        i = 2
-        while i < len(b):
-            assert b[i] == 0xFF
-            marker, ln = b[i + 1], int.from_bytes(b[i + 2 : i + 4], "big")
-            if marker in (0xC0, 0xC1):
-                return i + 4  # start of segment body
-            i += 2 + ln
-        raise AssertionError("no SOF")
-
-    off = sof_off(bytes(data))
-    bad_prec = bytearray(data)
-    bad_prec[off] = 12
-    with _pytest.raises(ValueError, match="precision"):
-        decode_jpeg(bytes(bad_prec))
-
-    # components start at body+6, 3 bytes each: (cid, hv, tq); make comp0
-    # h=3 while comp1 keeps h=1 → hmax=3 does not divide by... 3%1==0, so
-    # instead set comp0 h=3,v=2 and comp1 h=2,v=1 → hmax=3, comp1 h=2 → 3%2
-    bad_hv = bytearray(data)
-    bad_hv[off + 6 + 1] = 0x32
-    bad_hv[off + 9 + 1] = 0x21
-    with _pytest.raises(ValueError, match="sampling"):
-        decode_jpeg(bytes(bad_hv))
 
 
 def test_bpe_train_matches_reference_implementation(spark):
