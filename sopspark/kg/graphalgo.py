@@ -12,10 +12,10 @@ Per iteration: one join of the edge list with the (node-sized) rank
 table + one aggregate — both shuffles keyed on node id, which AQE
 coalesces/skew-splits. The rank table is nodes-sized, so at 100 TB of
 edges the iteration cost is dominated by the edge-scan join, exactly the
-shape a Pregel implementation has. Lineage is truncated with a lazy
-``localCheckpoint`` every iteration so the plan does not grow O(iters)
-deep (same idiom as the property-path closure in
-``functions/sparql.py``).
+shape a Pregel implementation has. The distributed rounds of every
+iterative algorithm here except HITS run under ``plans.graph.fixpoint``,
+which truncates lineage after every round so the plan does not grow
+O(iters) deep.
 
 Determinism: with a fixed iteration count the result is a closed form of
 the edge set; the only engine-order sensitivity is double summation
@@ -44,7 +44,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sopspark.plans.graph import DRIVER_THRESHOLD, driver_edges
+from sopspark.plans.graph import DRIVER_THRESHOLD, driver_edges, fixpoint
+
+
+def _undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Undirected edges as (a, b) = (least, greatest) endpoint, with self
+    loops and NULL endpoints dropped; duplicates stay (callers distinct)."""
+    return (
+        edges.select(F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b"))
+        .where(F.col("a") != F.col("b"))
+        .where(F.col("a").isNotNull() & F.col("b").isNotNull())
+    )
 
 
 def pagerank(
@@ -148,13 +158,7 @@ def clustering_coefficient(
     eagerly checkpointed so the (possibly expensive) edge-derivation
     lineage runs once, not once per plan branch.
     """
-    e = (
-        edges.select(F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b"))
-        .where(F.col("a") != F.col("b"))
-        .where(F.col("a").isNotNull() & F.col("b").isNotNull())
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = _undirected(edges, src, dst).distinct().localCheckpoint(eager=True)
     deg = (
         e.select(F.col("a").alias("node"))
         .unionAll(e.select(F.col("b").alias("node")))
@@ -180,7 +184,6 @@ def label_propagation(
     src: str = "src",
     dst: str = "dst",
     iters: int = 5,
-    checkpoint_every: int = 2,
     driver_threshold: int = DRIVER_THRESHOLD,
 ) -> DataFrame:
     """Community detection by synchronous label propagation (Raghavan et
@@ -198,9 +201,8 @@ def label_propagation(
     (node-sized) label table keyed on the neighbor id, then one
     (node,label) count aggregate and one per-node argmax aggregate — the
     argmax is a single ``min(struct(-cnt, label))`` so both aggregates
-    get map-side partial combine and no window/sort is needed. Lineage is
-    truncated with lazy ``localCheckpoint`` every ``checkpoint_every``
-    rounds (same idiom as :func:`pagerank`).
+    get map-side partial combine and no window/sort is needed. The rounds
+    run under ``plans.graph.fixpoint``.
 
     Hub skew: the cached adjacency is filled through a ``repartition("nbr")``
     exchange, which AQE never splits, so one task holds a hub's whole
@@ -217,11 +219,7 @@ def label_propagation(
     under ``driver_threshold`` distinct edges skip all of this and run
     the same rounds on the driver (module docstring).
     """
-    e = (
-        edges.select(F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b"))
-        .where(F.col("a") != F.col("b"))
-        .where(F.col("a").isNotNull() & F.col("b").isNotNull())
-    )
+    e = _undirected(edges, src, dst)
     small = driver_edges(e, driver_threshold)
     if small is not None:
         return _driver_lpa(edges.sparkSession, small, iters, dict(e.dtypes)["a"])
@@ -236,24 +234,25 @@ def label_propagation(
         .persist()
     )
     labels = adj.select("v").distinct().withColumn("label", F.col("v"))
+
+    def lpa_round(labels):
+        cnt = (
+            adj.join(labels.withColumnRenamed("v", "nbr"), "nbr")
+            .groupBy("v", "label")
+            .agg(F.count(F.lit(1)).alias("cnt"))
+        )
+        return (
+            cnt.groupBy("v")
+            .agg(
+                F.min(
+                    F.struct((-F.col("cnt")).alias("nc"), F.col("label").alias("l"))
+                ).alias("best")
+            )
+            .select("v", F.col("best.l").alias("label"))
+        )
+
     try:
-        for i in range(iters):
-            cnt = (
-                adj.join(labels.withColumnRenamed("v", "nbr"), "nbr")
-                .groupBy("v", "label")
-                .agg(F.count(F.lit(1)).alias("cnt"))
-            )
-            labels = (
-                cnt.groupBy("v")
-                .agg(
-                    F.min(
-                        F.struct((-F.col("cnt")).alias("nc"), F.col("label").alias("l"))
-                    ).alias("best")
-                )
-                .select("v", F.col("best.l").alias("label"))
-            )
-            if (i + 1) % checkpoint_every == 0 and i + 1 < iters:
-                labels = labels.localCheckpoint(eager=False)
+        labels = fixpoint(labels, lpa_round, iters)
         # eager final checkpoint: materialize before adj is unpersisted
         return labels.select(
             F.col("v").alias("node"), F.col("label").alias("community")
@@ -341,17 +340,17 @@ def personalized_pagerank(
     teleports to the sources — walks never leak probability to the
     uniform distribution). Same scale shape as :func:`pagerank`: per
     iteration one edge-scan join + one node-keyed aggregate, node-sized
-    rank table, lazy localCheckpoint lineage truncation.
+    rank table.
 
     The rank table carries its static per-node metadata (``r0`` and the
     precomputed dangling flag) so each round is exactly: one edge join +
     contrib aggregate, one filter-aggregate for the dangling mass (no
     anti-join — danglingness is a static property of the edge set), and
-    one node-keyed left join producing the next rank table. ``ranks`` is
-    lazily checkpointed every round: it feeds both the mass aggregate and
-    the contrib join, and without the truncation each reference would
-    re-execute the previous round's subtree (the HITS plan-doubling
-    lesson, measured 57 s vs 4 s there).
+    one node-keyed left join producing the next rank table. The rounds run
+    under ``plans.graph.fixpoint``, whose per-round truncation matters
+    here: ``ranks`` feeds both the mass aggregate and the contrib join,
+    and each reference would otherwise re-execute the previous round's
+    subtree (the HITS plan-doubling lesson, measured 57 s vs 4 s there).
 
     At most ``driver_threshold`` distinct edges and sources run on the
     driver (module docstring); ``driver_threshold=0`` forces the
@@ -413,38 +412,38 @@ def personalized_pagerank(
         )
     )
     d = float(damping)
+
+    def ppr_round(ranks):
+        contrib = (
+            ew.join(ranks.select(F.col("node").alias("src"), "rank"), "src")
+            .groupBy("dst")
+            .agg(F.sum(F.col("rank") / F.col("deg")).alias("contrib"))
+        )
+        dangling = ranks.where("dang").agg(
+            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("mass")
+        )
+        return (
+            ranks.select("node", "r0", "dang")
+            .join(contrib.withColumnRenamed("dst", "node"), "node", "left")
+            .crossJoin(F.broadcast(dangling))
+            .select(
+                "node",
+                "r0",
+                "dang",
+                (
+                    (1.0 - d) * F.col("r0")
+                    + d
+                    * (
+                        F.coalesce(F.col("contrib"), F.lit(0.0))
+                        + F.col("mass") * F.col("r0")
+                    )
+                ).alias("rank"),
+            )
+        )
+
     try:
         ranks = nr.withColumn("rank", F.col("r0")).localCheckpoint(eager=False)
-        for i in range(iters):
-            contrib = (
-                ew.join(
-                    ranks.select(F.col("node").alias("src"), "rank"), "src"
-                )
-                .groupBy("dst")
-                .agg(F.sum(F.col("rank") / F.col("deg")).alias("contrib"))
-            )
-            dangling = ranks.where("dang").agg(
-                F.coalesce(F.sum("rank"), F.lit(0.0)).alias("mass")
-            )
-            ranks = (
-                ranks.select("node", "r0", "dang")
-                .join(contrib.withColumnRenamed("dst", "node"), "node", "left")
-                .crossJoin(F.broadcast(dangling))
-                .select(
-                    "node",
-                    "r0",
-                    "dang",
-                    (
-                        (1.0 - d) * F.col("r0")
-                        + d
-                        * (
-                            F.coalesce(F.col("contrib"), F.lit(0.0))
-                            + F.col("mass") * F.col("r0")
-                        )
-                    ).alias("rank"),
-                )
-                .localCheckpoint(eager=False)
-            )
+        ranks = fixpoint(ranks, ppr_round, iters)
         return ranks.select("node", "rank").localCheckpoint(eager=True)
     finally:
         for cached in (deg, ew):
@@ -503,7 +502,6 @@ def kcore(
     src: str = "src",
     dst: str = "dst",
     rounds: int | None = 4,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """k-core peeling over an undirected graph: repeatedly remove
     vertices whose degree in the SURVIVING subgraph is < k. Returns
@@ -516,15 +514,10 @@ def kcore(
     Per round: one degree aggregate + two semi-joins filtering the
     adjacency list to surviving endpoints — all equi-keyed on node id,
     map-side combined / AQE-skew-splittable; the surviving-vertex table
-    is node-sized. Lineage truncates via localCheckpoint every
-    ``checkpoint_every`` rounds.
+    is node-sized. The peels run under ``plans.graph.fixpoint``; with
+    ``rounds=None`` they stop once a peel leaves the adjacency unchanged.
     """
-    e = (
-        edges.select(F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b"))
-        .where(F.col("a") != F.col("b"))
-        .where(F.col("a").isNotNull() & F.col("b").isNotNull())
-        .distinct()
-    )
+    e = _undirected(edges, src, dst).distinct()
     adj = e.select(F.col("a").alias("v"), F.col("b").alias("nbr")).unionAll(
         e.select(F.col("b").alias("v"), F.col("a").alias("nbr"))
     )
@@ -535,21 +528,8 @@ def kcore(
             surv.withColumnRenamed("v", "nbr"), "nbr", "left_semi"
         ).select("v", "nbr")
 
-    if rounds is not None:
-        # exactly `rounds` peels — rounds=0 is the raw degree table
-        for i in range(rounds):
-            adj = peel(adj)
-            if (i + 1) % checkpoint_every == 0 and i + 1 < rounds:
-                adj = adj.localCheckpoint(eager=False)
-    else:
-        prev_edges = adj.count()
-        while True:
-            # fixpoint: stop when no edge was peeled this round
-            adj = peel(adj).localCheckpoint(eager=True)
-            n_edges = adj.count()
-            if n_edges == prev_edges:
-                break
-            prev_edges = n_edges
+    # rounds=0 is the raw degree table
+    adj = fixpoint(adj, peel, rounds, key=() if rounds is not None else ("v", "nbr"))
     return adj.groupBy(F.col("v").alias("node")).agg(
         F.count(F.lit(1)).cast("int").alias("degree")
     )
@@ -591,19 +571,18 @@ def bfs_levels(
     source_col: str = "node",
     rounds: int = 6,
     directed: bool = False,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """Multi-source breadth-first search: shortest hop-distance from any
     source, capped at ``rounds`` hops. Returns ``(node, dist)`` for every
     REACHED node (unreached nodes are absent — at web scale the reached
-    frontier is the output, not the full vertex set).
+    frontier is the output, not the full vertex set). A NULL source is no
+    node and is dropped.
 
     Pregel shape: the frontier table carries (node, dist); each
     synchronous round is one equi-join of the edge list with the current
     distance table plus one min-aggregate — both keyed on node id,
-    map-side combined, AQE-skew-splittable. ``localCheckpoint`` truncates
-    lineage every ``checkpoint_every`` rounds (same idiom as
-    :func:`pagerank`). Integer arithmetic throughout, so the DuckDB
+    map-side combined, AQE-skew-splittable. The rounds run under
+    ``plans.graph.fixpoint``. Integer arithmetic throughout, so the DuckDB
     unrolled-CTE twin (:func:`bfs_levels_oracle_sql`) is exact.
     """
     e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d")).where(
@@ -612,23 +591,25 @@ def bfs_levels(
     if not directed:
         e = e.unionAll(e.select(F.col("d").alias("s"), F.col("s").alias("d")))
     e = e.distinct().persist()
-    dist = sources.select(F.col(source_col).alias("node")).distinct().withColumn(
-        "dist", F.lit(0).cast("int")
+    dist = (
+        sources.select(F.col(source_col).alias("node"))
+        .where(F.col("node").isNotNull())
+        .distinct()
+        .withColumn("dist", F.lit(0).cast("int"))
     )
+
+    def hop(dist):
+        nxt = e.join(dist.withColumnRenamed("node", "s"), "s").select(
+            F.col("d").alias("node"), (F.col("dist") + 1).alias("dist")
+        )
+        return (
+            dist.unionByName(nxt)
+            .groupBy("node")
+            .agg(F.min("dist").cast("int").alias("dist"))
+        )
+
     try:
-        for i in range(rounds):
-            hop = (
-                e.join(dist.withColumnRenamed("node", "s"), "s")
-                .select(F.col("d").alias("node"), (F.col("dist") + 1).alias("dist"))
-            )
-            dist = (
-                dist.unionByName(hop)
-                .groupBy("node")
-                .agg(F.min("dist").cast("int").alias("dist"))
-            )
-            if (i + 1) % checkpoint_every == 0 and i + 1 < rounds:
-                dist = dist.localCheckpoint(eager=False)
-        return dist.localCheckpoint(eager=True)
+        return fixpoint(dist, hop, rounds).localCheckpoint(eager=True)
     finally:
         e.unpersist()
 
@@ -648,7 +629,7 @@ def bfs_levels_oracle_sql(
       SELECT DISTINCT src AS s, dst AS d FROM (SELECT src, dst FROM raw {sym})
     ),
     d0 AS MATERIALIZED (
-      SELECT DISTINCT node, 0 AS dist FROM ({sources_sql})
+      SELECT DISTINCT node, 0 AS dist FROM ({sources_sql}) WHERE node IS NOT NULL
     )"""
     for i in range(1, rounds + 1):
         p = i - 1
@@ -701,12 +682,7 @@ def triangle_count(
     if assume_canonical:
         e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     else:
-        e = (
-            edges.select(F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b"))
-            .where(F.col("a") != F.col("b"))
-            .where(F.col("a").isNotNull() & F.col("b").isNotNull())
-            .distinct()
-        )
+        e = _undirected(edges, src, dst).distinct()
     if degrees is not None:
         deg = degrees.select(
             F.col(degrees.columns[0]).alias("v"), F.col(degrees.columns[1]).alias("d")
@@ -778,9 +754,7 @@ def adamic_adar(
     is a narrow left_anti join on the canonical (a, b) key.
     """
     e = (
-        edges.select(F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b"))
-        .where(F.col("a") != F.col("b"))
-        .where(F.col("a").isNotNull() & F.col("b").isNotNull())
+        _undirected(edges, src, dst)
         .distinct()
         # reused on three plan branches (two adj legs + the anti join)
         .localCheckpoint(eager=True)
@@ -972,16 +946,6 @@ def hits_oracle_sql(edges_sql: str, iters: int = 8) -> str:
     return sql
 
 
-def _sig(df: DataFrame, *cols: str):
-    """Order-insensitive (count, xor-hash) signature for fixpoint checks —
-    the same idiom as plans/graph.py::connected_components."""
-    row = df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.expr(f"bit_xor(xxhash64({', '.join(cols)}))").alias("h"),
-    ).collect()[0]
-    return (row["n"], row["h"])
-
-
 def strongly_connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -1011,9 +975,8 @@ def strongly_connected_components(
     Worst case is a reversed-id path (O(n) peels — the known weakness of
     coloring SCC; trim absorbs the common DAG case), typical corpus
     graphs finish in a handful of peels. Every fixpoint round is one
-    narrow equi-join + one map-side-combined aggregate with lazy
-    ``localCheckpoint`` lineage truncation every round; per-phase state
-    is a node-sized table. Deterministic: the
+    narrow equi-join + one map-side-combined aggregate, run to convergence
+    under ``plans.graph.fixpoint``; per-phase state is a node-sized table. Deterministic: the
     result is a closed form of the edge set. The DuckDB twin
     (:func:`scc_oracle_sql`) is an INDEPENDENT formulation — brute-force
     mutual reachability over a recursive closure — so parity
@@ -1059,11 +1022,10 @@ def strongly_connected_components(
             .select("src", "dst")
             .localCheckpoint(eager=True)
         )
-        # ---- 2. color: forward-min fixpoint
-        color = rem_nodes.withColumn("color", F.col("node"))
-        prev = None
-        rounds = 0
-        while True:
+        # ---- 2. color: forward-min fixpoint. color_{i+1} references
+        # color_i TWICE (succ join + direct), the HITS plan-doubling shape
+        # that fixpoint's per-round truncation absorbs
+        def color_round(color):
             succ = (
                 rem_edges.join(
                     color.select(
@@ -1074,23 +1036,16 @@ def strongly_connected_components(
                 .groupBy(F.col("src").alias("node"))
                 .agg(F.min("_c").alias("_m"))
             )
-            color = color.join(succ, "node", "left").select(
+            return color.join(succ, "node", "left").select(
                 "node",
                 F.least(F.col("color"), F.coalesce(F.col("_m"), F.col("color"))).alias(
                     "color"
                 ),
             )
-            rounds += 1
-            # every round: color_{i+1} references color_i TWICE (succ
-            # join + direct), so an untruncated window doubles the subtree
-            # per round — the HITS plan-doubling shape; the lazy checkpoint
-            # materializes with the signature job anyway
-            color = color.localCheckpoint(eager=False)
-            sig = _sig(color, "node", "color")
-            if sig == prev:
-                break
-            prev = sig
-        color = color.localCheckpoint(eager=True)
+
+        color = fixpoint(
+            rem_nodes.withColumn("color", F.col("node")), color_round, key=("node", "color")
+        )
         # ---- 3. confirm: BFS from roots over intra-color edges
         ic = (
             rem_edges.join(
@@ -1108,26 +1063,17 @@ def strongly_connected_components(
         reached = color.where(F.col("color") == F.col("node")).select(
             "node", F.col("color").alias("scc")
         )
-        prev = None
-        rounds = 0
-        while True:
-            step = (
-                ic.join(reached.withColumnRenamed("node", "src"), "src")
-                .select(F.col("dst").alias("node"), "scc")
+
+        # same doubling shape: reached_{i+1} references reached_i twice
+        def confirm_round(reached):
+            step = ic.join(reached.withColumnRenamed("node", "src"), "src").select(
+                F.col("dst").alias("node"), "scc"
             )
-            reached = reached.unionByName(step).groupBy("node").agg(
+            return reached.unionByName(step).groupBy("node").agg(
                 F.min("scc").alias("scc")
             )
-            rounds += 1
-            # same doubling shape as the color fixpoint: reached_{i+1}
-            # references reached_i twice (step join + union) — truncate
-            # every round
-            reached = reached.localCheckpoint(eager=False)
-            sig = _sig(reached, "node", "scc")
-            if sig == prev:
-                break
-            prev = sig
-        reached = reached.localCheckpoint(eager=True)
+
+        reached = fixpoint(reached, confirm_round, key=("node", "scc"))
         done.append(reached)
         # ---- 4. peel
         rem_nodes = rem_nodes.join(reached, "node", "left_anti").localCheckpoint(

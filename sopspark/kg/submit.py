@@ -2,8 +2,8 @@
 
 north_rule deploy mode: "ships via spark-submit --py-files". On a cluster:
 
-    python -c "import sopspark.session as s; print(s._package_zip())"  # build zip
-    spark-submit --py-files /tmp/sopspark_pyfiles.zip \
+    ZIP=$(python -c "import sopspark.session as s; print(s._package_zip())")
+    spark-submit --py-files "$ZIP" \
         path/to/sopspark/kg/submit.py \
         --master cluster --corpus /mnt/shared/corpus --workdir /mnt/shared/kg
 

@@ -10,6 +10,10 @@ each round two hash aggregates + one broadcast-free join.
 Why not GraphFrames: not available in this environment, and the star
 algorithm is ~40 lines of DataFrame code with the same asymptotics.
 
+Iteration policy: :func:`fixpoint` owns the lineage truncation and the
+convergence test of the distributed rounds here and in ``kg.graphalgo``
+(star CC, label propagation, personalized pagerank, k-core, BFS, SCC).
+
 Small-input plan: :func:`driver_edges` is the one gate for every graph
 algorithm with a driver plan (this module's union-find and
 ``kg.graphalgo``'s pagerank, personalized_pagerank and
@@ -22,6 +26,8 @@ forces the distributed plan.
 """
 
 from __future__ import annotations
+
+import itertools
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -90,6 +96,40 @@ def driver_edges(edges: DataFrame, threshold: int):
     return pdf if len(pdf) <= threshold else None
 
 
+def _sig(df: DataFrame, *cols: str):
+    """Order-insensitive (count, xor-hash) signature of ``df`` over
+    ``cols`` — one aggregate job, overflow-free."""
+    row = df.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.expr(f"bit_xor(xxhash64({', '.join(cols)}))").alias("h"),
+    ).collect()[0]
+    return (row["n"], row["h"])
+
+
+def fixpoint(state: DataFrame, step, rounds: int | None = None, key: tuple = ()) -> DataFrame:
+    """Apply ``step`` to ``state`` at most ``rounds`` times and return the
+    last state; ``rounds=None`` runs until converged and requires ``key``.
+
+    Every round's output is truncated with ``localCheckpoint(eager=False)``,
+    so the plan stays one round deep and a state the next round reads twice
+    is computed once. With ``key`` (column names) the loop stops after the
+    first round whose :func:`_sig` equals the previous round's; that job
+    also materializes the round's checkpoint. Without ``key`` nothing runs
+    here: the caller's first action computes the rounds.
+    """
+    if rounds is None and not key:
+        raise ValueError("fixpoint: rounds=None needs a convergence key")
+    prev = None
+    for _ in itertools.repeat(None) if rounds is None else range(rounds):
+        state = step(state).localCheckpoint(eager=False)
+        if key:
+            sig = _sig(state, *key)
+            if sig == prev:
+                break
+            prev = sig
+    return state
+
+
 def _driver_union_find(pdf, spark, dtype: str) -> DataFrame:
     """Small-input physical plan: union-find on the driver over the
     distinct (a, b) edges of ``pdf``."""
@@ -119,7 +159,6 @@ def _driver_union_find(pdf, spark, dtype: str) -> DataFrame:
 def connected_components(
     edges: DataFrame,
     max_iter: int = 50,
-    checkpoint_every: int = 3,
     driver_threshold: int = DRIVER_THRESHOLD,
 ) -> DataFrame:
     """(a, b) undirected edge list → (node, rep) with rep = min node id of
@@ -131,7 +170,10 @@ def connected_components(
     :func:`driver_edges`; a driver-literal edge list costs no job at
     all) — at 100 TB the equivalence-edge table is still typically ≪ the
     corpus; the distributed star iterations kick in above the threshold,
-    and ``driver_threshold=0`` forces them.
+    and ``driver_threshold=0`` forces them. The star rounds run under
+    :func:`fixpoint` until the edge set stops changing; ``max_iter`` caps
+    the rounds, and an edge map that has not converged by then is returned
+    as is (no error).
     """
     e = edges.select(F.col(edges.columns[0]).alias("a"), F.col(edges.columns[1]).alias("b"))
     # null-propagating: an edge with a null endpoint is dropped on both plans
@@ -143,20 +185,7 @@ def connected_components(
         return _driver_union_find(small, edges.sparkSession, dtype)
 
     e = e.distinct().localCheckpoint()
-
-    prev_sig = None
-    for i in range(max_iter):
-        e = _small_star(_large_star(e))
-        if (i + 1) % checkpoint_every == 0:
-            e = e.localCheckpoint()  # truncate lineage across rounds
-        # convergence: edge-set signature (order-insensitive hash + count)
-        sig = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.expr("bit_xor(xxhash64(a, b))").alias("h"),  # order-insensitive, overflow-free
-        ).collect()[0]
-        if prev_sig == (sig["n"], sig["h"]):
-            break
-        prev_sig = (sig["n"], sig["h"])
+    e = fixpoint(e, lambda cur: _small_star(_large_star(cur)), max_iter, key=("a", "b"))
 
     # after convergence every edge points node → component root
     mapping = e.select(F.col("a").alias("node"), F.col("b").alias("rep"))

@@ -6,6 +6,7 @@ Arrow-batched pandas UDFs) while remaining correct on local[N].
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 import zipfile
@@ -17,16 +18,32 @@ from pyspark.sql import SparkSession
 def _package_zip() -> str:
     """Zip the sopspark package for shipment to executors — the programmatic
     twin of ``spark-submit --py-files sopspark.zip`` (north_rule deploy mode).
-    Rebuilt on every call, over the same path in the temp directory."""
+
+    The zip is named by a hash of the package's ``.py`` files and built
+    once: it is written to a temporary file in the temp directory and
+    renamed into place, so a driver never ships a zip that another driver
+    is still writing, and a file with the hashed name is always complete."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    out = os.path.join(tempfile.gettempdir(), "sopspark_pyfiles.zip")
-    with zipfile.ZipFile(out, "w") as zf:
-        for root, _dirs, files in os.walk(pkg_dir):
-            for fn in files:
-                if fn.endswith(".py"):
-                    full = os.path.join(root, fn)
-                    rel = os.path.join("sopspark", os.path.relpath(full, pkg_dir))
-                    zf.write(full, rel)
+    files = {}
+    for root, _dirs, names in os.walk(pkg_dir):
+        for fn in names:
+            if fn.endswith(".py"):
+                full = os.path.join(root, fn)
+                with open(full, "rb") as fh:
+                    files[os.path.join("sopspark", os.path.relpath(full, pkg_dir))] = fh.read()
+    digest = hashlib.sha256(repr(sorted(files.items())).encode()).hexdigest()[:16]
+    out = os.path.join(tempfile.gettempdir(), f"sopspark_pyfiles_{digest}.zip")
+    if os.path.exists(out):
+        return out
+    fd, tmp = tempfile.mkstemp(prefix="sopspark_pyfiles_", suffix=".part", dir=os.path.dirname(out))
+    try:
+        with os.fdopen(fd, "wb") as fh, zipfile.ZipFile(fh, "w") as zf:
+            for rel, data in files.items():
+                zf.writestr(rel, data)
+        os.replace(tmp, out)
+    finally:
+        if os.path.exists(tmp):
+            os.unlink(tmp)
     return out
 
 

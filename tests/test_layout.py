@@ -49,3 +49,22 @@ def test_every_module_is_reached():
     reached.update(_module_name(ROOT / p) for p in ENTRY_POINTS)
     unreached = sorted(set(modules) - reached)
     assert not unreached, f"no entry point imports {unreached}"
+
+
+def test_package_zip_is_built_once_per_content():
+    """The executor zip is named by the package contents: a second call
+    returns the same file without rewriting it, and it holds every
+    ``sopspark/**/*.py``."""
+    import os
+    import zipfile
+
+    from sopspark.session import _package_zip
+
+    first = _package_zip()
+    before = os.stat(first)
+    second = _package_zip()
+    after = os.stat(second)
+    assert second == first
+    assert (after.st_ino, after.st_mtime_ns) == (before.st_ino, before.st_mtime_ns)
+    want = {p.relative_to(ROOT).as_posix() for p in (ROOT / "sopspark").rglob("*.py")}
+    assert set(zipfile.ZipFile(first).namelist()) == want

@@ -673,13 +673,16 @@ def test_kmeans_k1_and_validation(spark):
 def test_bfs_levels_path_graph(spark):
     from sopspark.kg.graphalgo import bfs_levels
 
-    # path 1-2-3-4-5-6 plus isolated source 9: rounds cap at 3 hops
+    # path 1-2-3-4-5-6 plus isolated source 9: rounds cap at 3 hops; a
+    # NULL source is no node and reaches nothing
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6)], ["src", "dst"]
     )
-    sources = spark.createDataFrame([(1,), (9,)], ["node"])
+    sources = spark.createDataFrame([(1,), (9,), (None,)], "node long")
     got = {r.node: r.dist for r in bfs_levels(edges, sources, rounds=3).collect()}
     assert got == {1: 0, 2: 1, 3: 2, 4: 3, 9: 0}  # 5,6 beyond the cap
+    zero = {r.node: r.dist for r in bfs_levels(edges, sources, rounds=0).collect()}
+    assert zero == {1: 0, 9: 0}
 
 
 def test_bfs_levels_directed_vs_undirected(spark):
@@ -759,6 +762,8 @@ def test_kcore_fixpoint_and_fixed_rounds(spark):
     assert one == fix                        # this graph converges in 1 peel
     empty = {r.node: r.degree for r in kcore(df, k=5, rounds=None).collect()}
     assert empty == {}                       # no 5-core exists
+    raw = {r.node: r.degree for r in kcore(df, k=3, rounds=0).collect()}
+    assert raw == {1: 3, 2: 3, 3: 3, 4: 4, 5: 2, 6: 1}  # no peel: degrees
 
 
 @pytest.mark.parametrize("plan", PLANS)
@@ -908,27 +913,69 @@ def test_graph_null_endpoints_dropped_both_paths(spark, plan):
     assert abs(sum(r["rank"] for r in ranks) - 1.0) < 1e-9
 
 
-def test_pagerank_small_graph_job_count(spark):
-    """A 2.5k-edge graph takes the driver plan: the edge collect plus the
-    output write schedule at most 3 Spark jobs (the distributed rounds
-    schedule ~90)."""
+def _random_edges(spark):
+    """2.5k random string edges over 1,000 nodes (seed 5), cached."""
     import random
-
-    from sopspark.kg.graphalgo import pagerank
 
     rng = random.Random(5)
     rows = [(f"n{rng.randint(0, 999)}", f"n{rng.randint(0, 999)}") for _ in range(2500)]
     edges = spark.createDataFrame(rows, "src string, dst string").persist()
     edges.count()
+    return edges
+
+
+def _job_count(spark, group, build):
+    """Spark jobs scheduled while calling ``build()`` and writing the frame
+    it returns to a noop sink, counted through a job group."""
     sc = spark.sparkContext
-    sc.setJobGroup("pagerank-small-graph", "pagerank job count")
+    sc.setJobGroup(group, group)
     try:
-        pagerank(edges).write.format("noop").mode("overwrite").save()
+        build().write.format("noop").mode("overwrite").save()
     finally:
         for prop in ("spark.jobGroup.id", "spark.job.description"):
             sc.setLocalProperty(prop, None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_pagerank_small_graph_job_count(spark):
+    """A 2.5k-edge graph takes the driver plan: the edge collect plus the
+    output write schedule at most 3 Spark jobs (the distributed rounds
+    schedule ~90)."""
+    from sopspark.kg.graphalgo import pagerank
+
+    edges = _random_edges(spark)
+    try:
+        assert _job_count(spark, "pagerank-small-graph", lambda: pagerank(edges)) <= 3
+    finally:
         edges.unpersist()
-    assert len(sc.statusTracker().getJobIdsForGroup("pagerank-small-graph")) <= 3
+
+
+@pytest.mark.parametrize(
+    "algo, bound",
+    [
+        # 37 jobs measured; 68 when the signature job recomputes rounds
+        # that were not truncated
+        pytest.param("star_cc", 45, id="star_cc"),
+        # 29 jobs measured; 106 when only every second round is truncated
+        pytest.param("kcore", 40, id="kcore"),
+    ],
+)
+def test_distributed_graph_rounds_job_count(spark, algo, bound):
+    """The distributed rounds under plans.graph.fixpoint schedule a small
+    multiple of their round count in jobs: forced star connected
+    components and kcore(k=4, rounds=4) on the 2.5k-edge random graph."""
+    from sopspark.kg.graphalgo import kcore
+    from sopspark.plans.graph import connected_components
+
+    edges = _random_edges(spark)
+    run = {
+        "star_cc": lambda: connected_components(edges, driver_threshold=0),
+        "kcore": lambda: kcore(edges, k=4, rounds=4),
+    }[algo]
+    try:
+        assert _job_count(spark, f"rounds-{algo}", run) <= bound
+    finally:
+        edges.unpersist()
 
 
 def test_retention_cohorts_closed_form(spark):
