@@ -27,6 +27,7 @@ from collections import defaultdict
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sopspark.session import local_df
 from sopspark.terms import IRI, RDF_NS, TERM_SQL_TYPE
 
 RDFS = "http://www.w3.org/2000/01/rdf-schema#"
@@ -111,12 +112,12 @@ def materialize_rdfs(quads: DataFrame, regime: str = "rdfs") -> DataFrame:
     def pairs_df(pairs, ca, cb):
         if not pairs:
             return None
-        return F.broadcast(spark.createDataFrame(pairs, f"{ca} string, {cb} string"))
+        return F.broadcast(local_df(spark, pairs, f"{ca} string, {cb} string"))
 
     # rdfs5/11: schema closure triples themselves
     closure_triples = [(a, SUBCLASS, b) for a, b in sub_class] + [(a, SUBPROP, b) for a, b in sub_prop]
     if closure_triples:
-        cdf = spark.createDataFrame(closure_triples, "a string, p string, b string").select(
+        cdf = local_df(spark, closure_triples, "a string, p string, b string").select(
             _iri_term(F.col("a")).alias("s"), _iri_term(F.col("p")).alias("p"), _iri_term(F.col("b")).alias("o")
         )
         new_parts.append(cdf)

@@ -45,6 +45,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sopspark.functions.expr import Node, _compile_bool, compile_expr, parse_expr, _P, _tokenize, ExprError
+from sopspark.session import local_df
 from sopspark.terms import IRI, LITERAL, RDF_NS, TERM_SQL_TYPE, XSD
 
 
@@ -1352,7 +1353,7 @@ def _eval_group(quads: DataFrame, g: PatternGroup) -> DataFrame | None:
     for vars_, rows in g.values:
         spark = quads.sparkSession
         schema = ", ".join(f"{v} struct<kind:tinyint,value:string,dt:string,lang:string>" for v in vars_)
-        vdf = spark.createDataFrame([tuple(r) for r in rows], schema)
+        vdf = local_df(spark, [tuple(r) for r in rows], schema)
         # UNDEF rows leave the variable unbound (compatible-with-anything)
         undef = {v for i, v in enumerate(vars_) if any(r[i] is None for r in rows)}
         vdf = _with_mn(F.broadcast(vdf), undef)
@@ -1589,9 +1590,8 @@ def _eval_describe(ok: DataFrame, q: Query) -> SparqlResult:
     consts = [r[1] for r in q.describe if r[0] == "term"]
     if consts:
         spark = ok.sparkSession
-        cdf = spark.createDataFrame(
-            [(c,) for c in consts],
-            "_r struct<kind:tinyint,value:string,dt:string,lang:string>",
+        cdf = local_df(
+            spark, [(c,) for c in consts], "_r struct<kind:tinyint,value:string,dt:string,lang:string>"
         )
         res_parts.append(cdf)
     var_names = [r[1] for r in q.describe if r[0] == "var"]

@@ -114,11 +114,11 @@ def canonicalize(
 
 def _driver_c14n(bnq: DataFrame, hash_name, depth_factor, permutation_limit) -> DataFrame:
     from sopspark.functions.rdfc10 import canonicalize_quads
+    from sopspark.session import local_df
 
     pyquads = [_row_to_pyquad(r) for r in bnq.collect()]
     lines = canonicalize_quads(pyquads, hash_name, depth_factor, permutation_limit)
-    spark = bnq.sparkSession
-    return spark.createDataFrame([(l,) for l in lines], "line string")
+    return local_df(bnq.sparkSession, [(l,) for l in lines], "line string")
 
 
 def _component_c14n(bnq: DataFrame, hash_name, depth_factor, permutation_limit) -> DataFrame:

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sopspark.session import local_df
 from sopspark.terms import nq_line, nt_term
 
 
@@ -266,9 +267,7 @@ def _write_blocks(
     spark = df.sparkSession
     header_lines = [f"@prefix {p}: <{ns}> ." for p, ns in sorted(prefixes.items())]
     if single_file:
-        header = spark.createDataFrame(
-            [("", l) for l in header_lines], "sort_key string, block string"
-        )
+        header = local_df(spark, [("", l) for l in header_lines], "sort_key string, block string")
         out = header.unionByName(blocks).orderBy("sort_key").coalesce(1)
         out.select("block").write.mode("overwrite").text(path)
         return
@@ -533,7 +532,8 @@ def serialize_rdfxml(df: DataFrame, path: str, single_file: bool = True) -> None
     """Write an RDF/XML document (rdf:RDF wrapper + per-subject blocks in
     code-point order)."""
     spark = df.sparkSession
-    wrap = spark.createDataFrame(
+    wrap = local_df(
+        spark,
         [
             ("", '<?xml version="1.0" encoding="utf-8"?>\n'
                  '<rdf:RDF xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#">'),

@@ -13,11 +13,16 @@ Reference behavior being re-expressed (not ported):
     output is reproducible across runs and executors.
 
 Spark design: ``spark.read.text`` gives one partition per file split — the
-rayon fan-out for free; the line grammar is applied with **vectorized pandas
-string ops inside mapInPandas** (one compiled regex, ``Series.str.extract``,
-Arrow batches — no per-row Python except the rare escaped-literal slow path).
-The UDF emits flat columns; term structs are rebuilt Catalyst-side so
-downstream ops stay in whole-stage codegen.
+rayon fan-out for free. Lines without escapes, quoted triples or characters
+the Java and Python regexes read differently are parsed **in Catalyst**: one
+``regexp_replace`` per line packs the four whole terms, and each term's
+kind comes from its first character (see ``parse_lines_df``). The other
+lines go to the pandas parser (``_parse_batch``: one compiled regex,
+``Series.str.extract``, per-row Python only for escapes and ``<<``): on the
+driver when a probe finds at most ``DRIVER_SLOW_LINES`` of them, in
+``mapInPandas`` above that, and not at all when there are none — so a clean
+file starts no Python worker. Both paths emit flat columns; term structs
+are built Catalyst-side so downstream ops stay in whole-stage codegen.
 """
 
 from __future__ import annotations
@@ -30,7 +35,12 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sopspark.session import local_df
 from sopspark.terms import BNODE, IRI, LITERAL, VARIABLE, XSD_STRING
+
+
+# language tag, with the RDF 1.2 base direction as "--ltr"/"--rtl"
+_LANG = r"[A-Za-z][A-Za-z0-9]*(?:-[A-Za-z0-9]+)*(?:--[A-Za-z]+)?"
 
 
 def _term_re(tag: str) -> str:
@@ -38,23 +48,19 @@ def _term_re(tag: str) -> str:
         rf"(?:<(?P<{tag}_iri>[^<>\s]*)>"
         rf"|_:(?P<{tag}_bn>[^\s]+)"
         rf"|\"(?P<{tag}_lit>(?:[^\"\\]|\\.)*)\""
-        rf"(?:@(?P<{tag}_lang>[A-Za-z][A-Za-z0-9]*(?:-[A-Za-z0-9]+)*(?:--[A-Za-z]+)?)"
+        rf"(?:@(?P<{tag}_lang>{_LANG})"
         rf"|\^\^<(?P<{tag}_dt>[^<>\s]*)>)?"
         rf"|\?(?P<{tag}_var>\w+))"
     )
 
 
-LINE_RE = re.compile(
-    r"^\s*"
-    + _term_re("s")
-    + r"\s+"
-    + _term_re("p")
-    + r"\s+"
-    + _term_re("o")
-    + r"(?:\s+"
-    + _term_re("g")
-    + r")?\s*\.\s*(?:#.*)?$"
-)
+def _line_re(term) -> str:
+    """The statement grammar around the terms; ``term(tag)`` gives each
+    term's regex."""
+    return rf"^\s*{term('s')}\s+{term('p')}\s+{term('o')}(?:\s+{term('g')})?\s*\.\s*(?:#.*)?$"
+
+
+LINE_RE = re.compile(_line_re(_term_re))
 
 BLANK_RE = re.compile(r"^\s*(?:#.*)?$")
 
@@ -174,7 +180,7 @@ def _scan_terms(body: str) -> list[str]:
     return out
 
 
-_LANG_RE = re.compile(r"^[A-Za-z][A-Za-z0-9]*(?:-[A-Za-z0-9]+)*(?:--[A-Za-z]+)?$")
+_LANG_RE = re.compile(rf"^{_LANG}$")
 
 
 def parse_term_str(text: str) -> tuple:
@@ -464,12 +470,108 @@ def _flat_to_quads(df: DataFrame) -> DataFrame:
     )
 
 
+# ---------------------------------------------------------------------------
+# JVM fast path
+#
+# Most lines hold no escape and no quoted triple; Catalyst parses those with
+# one regex per line. Only the lines that need Python reach ``_parse_batch``:
+# lines with a backslash, lines with ``<<``, and lines with a character that
+# Java's and Python's regexes treat differently. Python's ``\s`` also matches
+# U+001C-U+001F and the non-ASCII spaces, Java's ``.`` and ``$`` stop at
+# U+0085/U+2028/U+2029 and CR, and Python's ``\w`` (variables) is Unicode.
+# ---------------------------------------------------------------------------
+
+# Java regex: any line matching this is parsed by ``_parse_batch``
+SLOW_LINE_RE = (
+    r"\\|<<|[\n\r\x1c-\x1f\x85\xa0\u1680\u2000-\u200a\u2028\u2029\u202f\u205f\u3000]"
+    r"|\?\w*[^\x00-\x7f]"
+)
+# LINE_RE for lines with no escape, one capture group per whole term
+_JVM_TERM = (
+    r"(<[^<>\s]*>|_:[^\s]+"
+    rf"|\"[^\"\\]*\"(?:@{_LANG}|\^\^<[^<>\s]*>)?"
+    r"|\?\w+)"
+)
+_JVM_LINE_RE = _line_re(lambda _tag: _JVM_TERM)
+# U+001E marks a match and U+001F separates the terms: both are slow-line
+# characters, so no fast line contains them
+_JVM_PACKED = "\x1e$1\x1f$2\x1f$3\x1f$4"
+
+# At most this many slow lines are parsed on the driver; more run in
+# mapInPandas. Deciding costs one JVM job, ``slow.limit(T+1).collect()``.
+DRIVER_SLOW_LINES = 10_000
+
+
+def _jvm_term(t: Column, tag: str) -> list[Column]:
+    """One whole-term string ("" when absent) → its four flat columns; the
+    kind comes from the first character."""
+    c = t.substr(1, 1)
+    n = F.length(t)
+    body = F.substring_index(t.substr(F.lit(2), n), '"', 1)
+    suffix = t.substr(F.length(body) + 3, n)
+    is_lit = c == '"'
+    kind = (
+        F.when(c == "<", IRI).when(c == "_", BNODE).when(is_lit, LITERAL).when(c == "?", VARIABLE)
+    )
+    value = (
+        F.when(c == "<", t.substr(F.lit(2), n - 2))
+        .when(c == "_", t.substr(F.lit(3), n))
+        .when(c == "?", t.substr(F.lit(2), n))
+        .when(is_lit, body)
+    )
+    dt = F.when(is_lit & suffix.startswith("^"), suffix.substr(F.lit(4), F.length(suffix) - 4))
+    return [
+        kind.cast("tinyint").alias(f"{tag}_kind"),
+        value.alias(f"{tag}_value"),
+        F.nullif(dt, F.lit(XSD_STRING)).alias(f"{tag}_dt"),
+        F.when(is_lit & suffix.startswith("@"), suffix.substr(F.lit(2), n)).alias(f"{tag}_lang"),
+    ]
+
+
+def _jvm_parse(lines: DataFrame) -> DataFrame:
+    """Fast non-blank lines → flat rows; the line regex runs once per line."""
+    packed = lines.select(
+        "value", "src", F.split(F.regexp_replace("value", _JVM_LINE_RE, _JVM_PACKED), "\x1f").alias("_t")
+    )
+    matched = F.get("_t", 0).startswith("\x1e")
+    terms = packed.select(
+        F.when(matched, F.get("_t", 0).substr(F.lit(2), F.length(F.get("_t", 0)))).alias("s"),
+        *(F.get("_t", i).alias(tag) for i, tag in ((1, "p"), (2, "o"), (3, "g"))),
+        F.when(~matched, F.concat(F.lit("parse error: "), F.col("value").substr(1, 200))).alias("err"),
+        "src",
+    )
+    return terms.select(
+        *(c for tag in ("s", "p", "o", "g") for c in _jvm_term(F.col(tag), tag)), "err", "src"
+    )
+
+
+def _driver_parse(spark: SparkSession, rows: list) -> DataFrame:
+    """A few slow lines, parsed with ``_parse_batch`` on the driver into an
+    Arrow ``LocalRelation``."""
+    out = _parse_batch(pd.DataFrame(rows, columns=["value", "src"]))[_FLAT_COLS + ["err", "src"]]
+    out = out.astype(object).where(out.notna(), None)
+    return local_df(spark, list(out.itertuples(index=False, name=None)), FLAT_SCHEMA)
+
+
 def parse_lines_df(lines: DataFrame, with_src: bool = False) -> DataFrame:
     """Parse a DataFrame with a string column ``value`` (and optional ``src``)
-    into the quad schema. Keeps the ``src`` column for bnode scoping."""
+    into the quad schema. Keeps the ``src`` column for bnode scoping.
+
+    Catalyst parses the lines that need no Python (see ``SLOW_LINE_RE``).
+    One probe job looks for the others: none plans no Python at all, up to
+    ``DRIVER_SLOW_LINES`` are parsed on the driver, and more run through
+    ``mapInPandas``."""
     if "src" not in lines.columns:
         lines = lines.withColumn("src", F.lit(""))
-    flat = lines.mapInPandas(_parse_partitions, schema=FLAT_SCHEMA)
+    lines = lines.select("value", "src")
+    slow_line = F.col("value").rlike(SLOW_LINE_RE)
+    flat = _jvm_parse(lines.where(~slow_line & ~F.col("value").rlike(BLANK_RE.pattern)))
+    slow = lines.where(slow_line)
+    probe = slow.limit(DRIVER_SLOW_LINES + 1).collect()
+    if len(probe) > DRIVER_SLOW_LINES:
+        flat = flat.unionByName(slow.mapInPandas(_parse_partitions, schema=FLAT_SCHEMA))
+    elif probe:
+        flat = flat.unionByName(_driver_parse(lines.sparkSession, [tuple(r) for r in probe]))
     quads = _flat_to_quads(flat)
     if not with_src:
         quads = quads.drop("src")

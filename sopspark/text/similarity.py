@@ -22,6 +22,8 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from sopspark.session import local_df
+
 
 def _norm_col(vec):
     return F.sqrt(F.aggregate(vec, F.lit(0.0), lambda a, x: a + x * x))
@@ -269,7 +271,8 @@ def _assign_lists(df: DataFrame, out_id: str, vec_col: str, cent, n: int) -> Dat
             "_list", F.explode_outer(_nearest_centroids(F.col("_v"), cent, n))
         )
     spark = df.sparkSession
-    cdf = spark.createDataFrame(
+    cdf = local_df(
+        spark,
         [(j, [float(x) for x in row]) for j, row in enumerate(cent)],
         "_list int, _cvec array<double>",
     )

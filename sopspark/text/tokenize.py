@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sopspark.session import local_df
+
 
 def _pair_counts(cur: DataFrame) -> DataFrame:
     """Adjacent-pair counts over the vocab table (one merge round's
@@ -126,9 +128,7 @@ def bpe_train(
         cur = _apply_merge(cur, l, r)
         if rank % 4 == 0 and rank < n_merges:
             cur = cur.localCheckpoint()
-    return spark.createDataFrame(
-        merges, "rank int, lhs string, rhs string, merged string, pair_count bigint"
-    )
+    return local_df(spark, merges, "rank int, lhs string, rhs string, merged string, pair_count bigint")
 
 
 def bpe_apply(

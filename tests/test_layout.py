@@ -68,3 +68,31 @@ def test_package_zip_is_built_once_per_content():
     assert (after.st_ino, after.st_mtime_ns) == (before.st_ino, before.st_mtime_ns)
     want = {p.relative_to(ROOT).as_posix() for p in (ROOT / "sopspark").rglob("*.py")}
     assert set(zipfile.ZipFile(first).namelist()) == want
+
+
+def test_driver_literals_use_local_df():
+    """A Python list handed to ``createDataFrame`` is parallelized into a
+    PythonRDD, so every job over it starts Python workers; driver literals
+    go through ``session.local_df`` (an Arrow ``LocalRelation``) instead."""
+    literals = (ast.List, ast.Tuple, ast.ListComp, ast.GeneratorExp, ast.SetComp, ast.DictComp)
+    found = []
+    for path in sorted((ROOT / "sopspark").rglob("*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        allowed = set()
+        if path.name == "session.py":
+            for fn in ast.walk(tree):
+                if isinstance(fn, ast.FunctionDef) and fn.name == "local_df":
+                    allowed.update(id(n) for n in ast.walk(fn))
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "createDataFrame"
+                and id(node) not in allowed
+            ):
+                data = node.args[0] if node.args else next(
+                    (k.value for k in node.keywords if k.arg == "data"), None
+                )
+                if isinstance(data, literals):
+                    found.append(f"{path.relative_to(ROOT)}:{node.lineno}")
+    assert not found, f"createDataFrame over a Python literal at {found}; use session.local_df"

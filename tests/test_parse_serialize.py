@@ -2,6 +2,7 @@
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from sopspark.operators.serialize import collect_nq_lines
@@ -655,3 +656,139 @@ def test_rdfxml_type_attribute_lang_clear_and_bnode_scoping(spark, tmp_path):
     scoped = parse_rdfxml(spark, paths, scope_bnodes_per_file=True)
     labels2 = {r["s"]["value"] for r in scoped.collect() if r["s"]["kind"] == BNODE}
     assert len(labels2) == 2  # scoped: distinct per file
+
+
+# ---------------------------------------------------------------------------
+# JVM fast path vs the pandas parser
+# ---------------------------------------------------------------------------
+
+XSD_STR = "http://www.w3.org/2001/XMLSchema#string"
+PARSE_EDGE_LINES = [
+    "",
+    "   \t",
+    "# only a comment",
+    "  # indented comment",
+    '<http://e/s> <http://e/p> "v" . # trailing comment',
+    '<http://e/s> <http://e/p> "v" .# no space',
+    '<http://e/s> <http://e/p> "v" . # comment ending with .',
+    '<http://e/s#frag> <http://e/p#x> "a # b" .',
+    '<http://e/s> <http://e/p> "a. # b" <http://e/g#1> .',
+    "<> <http://e/p> <> .",
+    '<http://e/s> <http://e/p> "" .',
+    '<http://e/s> <http://e/p> ""^^<> .',
+    f'<http://e/s> <http://e/p> "x"^^<{XSD_STR}> .',
+    '<http://e/s> <http://e/p> "1"^^<http://www.w3.org/2001/XMLSchema#integer> .',
+    '<http://e/s> <http://e/p> "hello"@en--ltr .',
+    '<http://e/s> <http://e/p> "hi"@en-GB-x-1 .',
+    '<http://e/s> <http://e/p> "x"@ .',
+    '<http://e/s> <http://e/p> "x"@1a .',
+    '<http://e/s> <http://e/p> "x"^^<a b> .',
+    "?s <http://e/p> ?o .",
+    "?s ?p ?o ?g .",
+    "_:a <http://e/p> _:b _:g .",
+    '<http://e/s> <http://e/p> "x" <http://e/g> .',
+    '<a"b> <http://e/p> "x"^^<http://e/d"t> .',
+    "\t<http://e/s>\t<http://e/p>\t<http://e/o>\t.\t",
+    "<http://e/s>\x0b<http://e/p>\x0c<http://e/o> .",
+    "<http://e/s><http://e/p> <http://e/o> .",
+    "<http://e/s> <http://e/p> <http://e/o>",
+    "<http://e/s> <http://e/p> .",
+    "_:a _:b _:c _:d _:e .",
+    "this is garbage .",
+    '<http://e/s> <http://e/p> "unterminated .',
+    '_:b1 <http://e/p> "a \\"quoted\\" \\n value" .',
+    '<http://e/\\u00e9> <http://e/p> "caf\\u00e9" .',
+    "<http://e/a\\tb> <http://e/p> <http://e/o> .",
+    '<http://e/s> <http://e/p> "a\\U00110000b" .',
+    "<< <http://e/a> <http://e/b> <http://e/c> >> <http://e/p> <http://e/o> .",
+    '<http://e/s> <http://e/p> "<<not quoted>>" .',
+    *(f'<http://e/s>{c}<http://e/p> "a{c}b" .' for c in "\x1c\x1d\x1e\x1f"),
+    '<http://e/s> <http://e/p>\x85"a" .',
+    '<http://e/s> <http://e/p> "a\x85b" .',
+    '<http://e/s> <http://e/p>\xa0"a" .',
+    '<http://e/s> <http://e/p> "a\xa0b" .',
+    '<http://e/s> <http://e/p>\u2028"a" .',
+    '<http://e/s> <http://e/p> "a\u2028b" . # c\u2028',
+    '<http://e/s> <http://e/p> "a" . ',
+    '<http://e/s> <http://e/p> "a b" .',
+    '<http://e/s> <http://e/p> "a　b"　.',
+    '<http://e/s> <http://e/p> "café ☕ \U0001F600" .',
+    '<http://e/é> <http://e/ü> <http://e/\U0001F600> .',
+    '_:é <http://e/p> "ü"@de .',
+    '?café <http://e/p> "x" .',
+    '?xé <http://e/p> ?y .',
+    "<http://e/s?q=é> <http://e/p> <http://e/o> .",
+]
+
+
+def _generated_lines(n: int) -> list[str]:
+    """Seeded lines that combine legal and illegal terms and separators."""
+    import random
+
+    rng = random.Random(11)
+    terms = [
+        "<http://e/a>", "<>", "_:b", "?v", '"x"', '""', '"a b"@en', '"1"^^<http://d>',
+        '""^^<>', '"é"@fr', "<http://é/☕>", f'"x"^^<{XSD_STR}>', '"x"@en--ltr', "?é",
+        "_:é", '"a#b"', "<a#b>", "<<", '"a\\tb"',
+    ]
+    seps = [" ", "\t", "  ", "\x0b", "\xa0", "\x1f", ""]
+    ends = [" .", ".", " . ", " . # c", "", " .#", " . x", " . "]
+    out = []
+    for _ in range(n):
+        ts = [rng.choice(terms) for _ in range(rng.choice([2, 3, 3, 3, 4, 4, 5]))]
+        out.append(
+            rng.choice(["", " ", "\t"])
+            + "".join(t + rng.choice(seps) for t in ts[:-1])
+            + ts[-1]
+            + rng.choice(ends)
+        )
+    return out
+
+
+def _fixture_lines(fixtures_dir) -> list[str]:
+    golden = os.path.join(os.path.dirname(fixtures_dir), "golden")
+    paths = [os.path.join(fixtures_dir, f) for f in sorted(os.listdir(fixtures_dir)) if f.endswith(".nt")]
+    paths += [os.path.join(golden, f) for f in sorted(os.listdir(golden)) if f.endswith(".nq")]
+    lines = []
+    for p in paths:
+        with open(p, encoding="utf-8") as f:
+            lines += f.read().splitlines()
+    assert lines
+    return lines
+
+
+@pytest.mark.parametrize("slow_branch", ["driver", "mapInPandas"])
+def test_parse_lines_df_matches_pandas_parser(spark, fixtures_dir, monkeypatch, slow_branch):
+    """Row for row, ``parse_lines_df`` (Catalyst for plain lines, the
+    pandas parser for the rest) gives what ``_parse_batch`` run on the
+    driver gives, on the fixture lines and on edge lines. With the driver
+    limit at 0 the slow lines take ``mapInPandas`` instead."""
+    import pandas as pd
+
+    from sopspark.sources import ntriples
+
+    if slow_branch == "mapInPandas":
+        monkeypatch.setattr(ntriples, "DRIVER_SLOW_LINES", 0)
+    lines = _fixture_lines(fixtures_dir) + PARSE_EDGE_LINES + _generated_lines(400)
+    ids = [str(i) for i in range(len(lines))]
+
+    want = {}
+    oracle = ntriples._parse_batch(pd.DataFrame({"value": lines, "src": ids}))
+    for rec in oracle.astype(object).where(oracle.notna(), None).to_dict("records"):
+        flat = []
+        for t in "spog":
+            kind = rec[f"{t}_kind"]
+            flat += [None] * 4 if kind is None else [int(kind)] + [rec[f"{t}_{f}"] for f in ("value", "dt", "lang")]
+        want[rec["src"]] = (*flat, rec["err"])
+
+    df = spark.createDataFrame(list(zip(lines, ids)), "value string, src string")
+    got = {}
+    for r in parse_lines_df(df, with_src=True).collect():
+        flat = []
+        for t in "spog":
+            flat += [None] * 4 if r[t] is None else [r[t].kind, r[t].value, r[t].dt, r[t].lang]
+        got[r.src] = (*flat, r.err)
+
+    diff = {lines[int(i)]: (want.get(i), got.get(i)) for i in set(want) | set(got) if want.get(i) != got.get(i)}
+    assert not diff
+    assert len(got) == len(want) > len(PARSE_EDGE_LINES)

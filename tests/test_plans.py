@@ -441,3 +441,90 @@ def test_local_df_is_local_relation_with_declared_types(spark):
     assert empty.schema == df.schema and empty.collect() == []
     ranks = local_df(spark, [("a", 0.5)], "node string, rank double NOT NULL")
     assert not ranks.schema["rank"].nullable
+
+
+def test_local_df_struct_and_array_columns(spark):
+    """TERM structs (SPARQL VALUES/DESCRIBE constants) and double arrays
+    (k-means centroids) build from Python tuples and lists, NULLs kept."""
+    from sopspark.session import is_local, local_df
+    from sopspark.terms import TERM_SQL_TYPE
+
+    rows = [((0, "http://e/a", None, None), [1.0, 2.5]), ((2, "x", None, "en"), None), (None, [])]
+    df = local_df(spark, rows, f"t {TERM_SQL_TYPE}, v array<double>")
+    assert is_local(df)
+    assert [(None if r.t is None else tuple(r.t), r.v) for r in df.collect()] == rows
+
+
+# plan nodes that run Python workers (a PythonRDD scans as ExistingRDD)
+PYTHON_NODES = ("MapInPandas", "ArrowEvalPython", "BatchEvalPython", "ExistingRDD")
+
+CLEAN_NT = [
+    "# a comment",
+    "",
+    "<http://e/s> <http://e/p> <http://e/o> .",
+    '_:b <http://e/name> "Ana"@en <http://e/g> .',
+    '<http://e/s> <http://e/age> "42"^^<http://www.w3.org/2001/XMLSchema#integer> .',
+    '<http://e/é> <http://e/p> "café" . # non-ASCII stays on the JVM',
+]
+
+
+def _parse_file(spark, tmp_path, lines):
+    from sopspark.sources.ntriples import parse_ntriples
+
+    path = tmp_path / "in.nt"
+    path.write_text("\n".join(lines) + "\n", encoding="utf-8")
+    return parse_ntriples(spark, str(path))
+
+
+def test_parse_clean_file_plans_no_python(spark, tmp_path):
+    """A file with no line that needs Python parses entirely in Catalyst."""
+    df = _parse_file(spark, tmp_path, CLEAN_NT)
+    plan = _physical(df)
+    assert not [n for n in PYTHON_NODES if n in plan], plan
+    assert "LocalTableScan" not in plan
+    rows = df.collect()
+    assert len(rows) == 4 and all(r.err is None for r in rows)
+
+
+def test_parse_few_escaped_lines_plans_no_python(spark, tmp_path):
+    """A few escaped or quoted-triple lines are parsed on the driver and
+    joined as a LocalRelation: the plan still holds no Python node."""
+    slow = [
+        '<http://e/s> <http://e/p> "a \\"b\\"" .',
+        "<< <http://e/a> <http://e/b> <http://e/c> >> <http://e/p> <http://e/o> .",
+    ]
+    df = _parse_file(spark, tmp_path, CLEAN_NT + slow)
+    plan = _physical(df)
+    assert not [n for n in PYTHON_NODES if n in plan], plan
+    assert "LocalTableScan" in plan
+    rows = df.collect()
+    assert len(rows) == 6 and all(r.err is None for r in rows)
+    assert 'a "b"' in {r.o.value for r in rows}
+
+
+def test_parse_plan_evaluates_line_regex_once(spark, tmp_path):
+    """The line regex appears once in the optimized plan (every term column
+    reads one split of its result) and the plan stays small."""
+    from sopspark.sources.ntriples import _JVM_LINE_RE
+
+    plan = _optimized(_parse_file(spark, tmp_path, CLEAN_NT))
+    assert plan.count(_JVM_LINE_RE) == 1
+    assert len(plan) <= 12_000, len(plan)
+
+
+def test_canonicalize_driver_path_is_local(spark):
+    """The driver-path RDFC-1.0 output is a driver literal, not a
+    parallelized Python list."""
+    from sopspark.operators.canonicalize import _driver_c14n
+    from sopspark.session import is_local, local_df
+    from sopspark.terms import BNODE, IRI, TERM_SQL_TYPE
+
+    quads = local_df(
+        spark,
+        [((BNODE, "x", None, None), (IRI, "http://e/p", None, None), (BNODE, "y", None, None), None)],
+        ", ".join(f"{c} {TERM_SQL_TYPE}" for c in "spog"),
+    )
+    out = _driver_c14n(quads, "sha256", 1.0, 6)
+    assert is_local(out)
+    (line,) = [r.line for r in out.collect()]
+    assert sorted(re.findall(r"_:c14n\d", line)) == ["_:c14n0", "_:c14n1"]
