@@ -18,11 +18,14 @@ the Java and Python regexes read differently are parsed **in Catalyst**: one
 ``regexp_replace`` per line packs the four whole terms, and each term's
 kind comes from its first character (see ``parse_lines_df``). The other
 lines go to the pandas parser (``_parse_batch``: one compiled regex,
-``Series.str.extract``, per-row Python only for escapes and ``<<``): on the
-driver when a probe finds at most ``DRIVER_SLOW_LINES`` of them, in
-``mapInPandas`` above that, and not at all when there are none — so a clean
-file starts no Python worker. Both paths emit flat columns; term structs
-are built Catalyst-side so downstream ops stay in whole-stage codegen.
+``Series.str.extract``, per-row Python only for escapes and ``<<``) in
+``mapInPandas``, which is planned only when a one-job probe finds such a
+line — so a clean file starts no Python worker. Both paths emit flat
+columns; term structs are built Catalyst-side so downstream ops stay in
+whole-stage codegen.
+
+Output order is not input order: the pandas-parsed lines follow all the
+Catalyst-parsed ones (and ``<<`` lines follow the rest of their batch).
 """
 
 from __future__ import annotations
@@ -32,10 +35,9 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from sopspark.session import local_df
 from sopspark.terms import BNODE, IRI, LITERAL, VARIABLE, XSD_STRING
 
 
@@ -497,10 +499,6 @@ _JVM_LINE_RE = _line_re(lambda _tag: _JVM_TERM)
 # characters, so no fast line contains them
 _JVM_PACKED = "\x1e$1\x1f$2\x1f$3\x1f$4"
 
-# At most this many slow lines are parsed on the driver; more run in
-# mapInPandas. Deciding costs one JVM job, ``slow.limit(T+1).collect()``.
-DRIVER_SLOW_LINES = 10_000
-
 
 def _jvm_term(t: Column, tag: str) -> list[Column]:
     """One whole-term string ("" when absent) → its four flat columns; the
@@ -545,12 +543,13 @@ def _jvm_parse(lines: DataFrame) -> DataFrame:
     )
 
 
-def _driver_parse(spark: SparkSession, rows: list) -> DataFrame:
-    """A few slow lines, parsed with ``_parse_batch`` on the driver into an
-    Arrow ``LocalRelation``."""
-    out = _parse_batch(pd.DataFrame(rows, columns=["value", "src"]))[_FLAT_COLS + ["err", "src"]]
-    out = out.astype(object).where(out.notna(), None)
-    return local_df(spark, list(out.itertuples(index=False, name=None)), FLAT_SCHEMA)
+def _has_rows(df: DataFrame) -> bool:
+    """True when ``df`` has a row, in one JVM job over every partition: a
+    noop write that observes the row count (``count()`` takes two jobs
+    under AQE, ``limit(1).collect()`` one more per partition batch)."""
+    seen = Observation()
+    df.observe(seen, F.count(F.lit(1)).alias("n")).write.format("noop").mode("overwrite").save()
+    return seen.get["n"] > 0
 
 
 def parse_lines_df(lines: DataFrame, with_src: bool = False) -> DataFrame:
@@ -558,20 +557,16 @@ def parse_lines_df(lines: DataFrame, with_src: bool = False) -> DataFrame:
     into the quad schema. Keeps the ``src`` column for bnode scoping.
 
     Catalyst parses the lines that need no Python (see ``SLOW_LINE_RE``).
-    One probe job looks for the others: none plans no Python at all, up to
-    ``DRIVER_SLOW_LINES`` are parsed on the driver, and more run through
-    ``mapInPandas``."""
+    One probe job, run now, looks for the others; only when it finds one is
+    ``mapInPandas`` planned, over those lines alone."""
     if "src" not in lines.columns:
         lines = lines.withColumn("src", F.lit(""))
     lines = lines.select("value", "src")
     slow_line = F.col("value").rlike(SLOW_LINE_RE)
     flat = _jvm_parse(lines.where(~slow_line & ~F.col("value").rlike(BLANK_RE.pattern)))
     slow = lines.where(slow_line)
-    probe = slow.limit(DRIVER_SLOW_LINES + 1).collect()
-    if len(probe) > DRIVER_SLOW_LINES:
+    if _has_rows(slow):
         flat = flat.unionByName(slow.mapInPandas(_parse_partitions, schema=FLAT_SCHEMA))
-    elif probe:
-        flat = flat.unionByName(_driver_parse(lines.sparkSession, [tuple(r) for r in probe]))
     quads = _flat_to_quads(flat)
     if not with_src:
         quads = quads.drop("src")

@@ -2,7 +2,6 @@
 
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 from sopspark.operators.serialize import collect_nq_lines
@@ -757,18 +756,15 @@ def _fixture_lines(fixtures_dir) -> list[str]:
     return lines
 
 
-@pytest.mark.parametrize("slow_branch", ["driver", "mapInPandas"])
-def test_parse_lines_df_matches_pandas_parser(spark, fixtures_dir, monkeypatch, slow_branch):
+def test_parse_lines_df_matches_pandas_parser(spark, fixtures_dir):
     """Row for row, ``parse_lines_df`` (Catalyst for plain lines, the
-    pandas parser for the rest) gives what ``_parse_batch`` run on the
-    driver gives, on the fixture lines and on edge lines. With the driver
-    limit at 0 the slow lines take ``mapInPandas`` instead."""
+    pandas parser in ``mapInPandas`` for the rest) gives what
+    ``_parse_batch`` run on the driver gives, on the fixture lines and on
+    edge lines."""
     import pandas as pd
 
     from sopspark.sources import ntriples
 
-    if slow_branch == "mapInPandas":
-        monkeypatch.setattr(ntriples, "DRIVER_SLOW_LINES", 0)
     lines = _fixture_lines(fixtures_dir) + PARSE_EDGE_LINES + _generated_lines(400)
     ids = [str(i) for i in range(len(lines))]
 

@@ -469,11 +469,23 @@ CLEAN_NT = [
 
 
 def _parse_file(spark, tmp_path, lines):
+    """Parse ``lines`` split over two files; assert that parsing (which
+    runs the slow-line probe) scheduled exactly one Spark job over both."""
     from sopspark.sources.ntriples import parse_ntriples
 
-    path = tmp_path / "in.nt"
-    path.write_text("\n".join(lines) + "\n", encoding="utf-8")
-    return parse_ntriples(spark, str(path))
+    half = len(lines) // 2
+    paths = [tmp_path / "a.nt", tmp_path / "b.nt"]
+    for path, part in zip(paths, (lines[:half], lines[half:])):
+        path.write_text("\n".join(part) + "\n", encoding="utf-8")
+    sc, group = spark.sparkContext, f"parse_probe_{tmp_path.name}"
+    sc.setJobGroup(group, group)
+    try:
+        df = parse_ntriples(spark, [str(p) for p in paths])
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(prop, None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    return df
 
 
 def test_parse_clean_file_plans_no_python(spark, tmp_path):
@@ -481,22 +493,24 @@ def test_parse_clean_file_plans_no_python(spark, tmp_path):
     df = _parse_file(spark, tmp_path, CLEAN_NT)
     plan = _physical(df)
     assert not [n for n in PYTHON_NODES if n in plan], plan
-    assert "LocalTableScan" not in plan
     rows = df.collect()
     assert len(rows) == 4 and all(r.err is None for r in rows)
 
 
-def test_parse_few_escaped_lines_plans_no_python(spark, tmp_path):
-    """A few escaped or quoted-triple lines are parsed on the driver and
-    joined as a LocalRelation: the plan still holds no Python node."""
+def test_parse_escaped_lines_alone_go_through_pandas(spark, tmp_path):
+    """Escaped and quoted-triple lines are parsed by one ``mapInPandas``
+    that reads only the lines the slow-line regex picks out."""
+    from sopspark.sources.ntriples import SLOW_LINE_RE
+
     slow = [
         '<http://e/s> <http://e/p> "a \\"b\\"" .',
         "<< <http://e/a> <http://e/b> <http://e/c> >> <http://e/p> <http://e/o> .",
     ]
     df = _parse_file(spark, tmp_path, CLEAN_NT + slow)
     plan = _physical(df)
-    assert not [n for n in PYTHON_NODES if n in plan], plan
-    assert "LocalTableScan" in plan
+    assert plan.count("MapInPandas") == 1, plan
+    below = plan[plan.index("MapInPandas"):].split("FileScan")[0]
+    assert "RLIKE(value#" in below and SLOW_LINE_RE in below and "NOT RLIKE" not in below, plan
     rows = df.collect()
     assert len(rows) == 6 and all(r.err is None for r in rows)
     assert 'a "b"' in {r.o.value for r in rows}
