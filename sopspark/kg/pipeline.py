@@ -8,7 +8,13 @@ next to a ``_lineage.json`` manifest recording:
   * the manifest hashes of its inputs (so a changed upstream invalidates
     downstream),
   * row count, per-file row counts (parquet footer metadata — the sandbox
-    stand-in for Iceberg snapshot properties), wall time, engine version.
+    stand-in for Iceberg snapshot properties), wall time, engine version,
+  * the output schema (``StructType.jsonValue()``).
+
+Checkpoints are read back with the recorded schema, so a re-read is a plan,
+not a job: without one Spark runs a one-task job to infer a parquet
+schema. A manifest or snapshot entry written before the schema was
+recorded has none; those reads fall back to inference.
 
 ``run_pipeline`` skips any stage whose manifest matches (config, inputs) —
 kill the job at any boundary and the rerun resumes mid-pipeline. On a real
@@ -17,9 +23,9 @@ deployment the same manifests land in Iceberg snapshot metadata
 
 Snapshots: every re-materialization writes a NEW ``data_vN`` directory and
 appends to the stage's ``_snapshots.json`` log (append-only, the Iceberg
-snapshot-history twin) — so handles from earlier runs stay readable,
-``read_snapshot`` time-travels to any retained version, and
-``expire_snapshots`` is the retention knob.
+snapshot-history twin; each entry records its schema too) — so handles
+from earlier runs stay readable, ``read_snapshot`` time-travels to any
+retained version, and ``expire_snapshots`` is the retention knob.
 """
 
 from __future__ import annotations
@@ -32,6 +38,7 @@ from dataclasses import dataclass, field
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 @dataclass
@@ -61,9 +68,9 @@ def _snap_log_path(workdir: str, stage: str) -> str:
 def snapshots(workdir: str, stage: str) -> list[dict]:
     """The stage's snapshot log, oldest first — the sandbox twin of
     Iceberg's snapshot history. Each entry: version, manifest_hash, rows,
-    written_at, path. A pre-snapshot (un-versioned ``data``) checkpoint
-    surfaces as a synthesized version-0 entry so time travel and
-    retention see it too."""
+    written_at, path, schema. A pre-snapshot (un-versioned ``data``)
+    checkpoint surfaces as a synthesized version-0 entry, without a
+    schema, so time travel and retention see it too."""
     p = _snap_log_path(workdir, stage)
     if not os.path.exists(p):
         if os.path.isdir(os.path.join(workdir, stage, "data")):
@@ -100,7 +107,7 @@ def read_snapshot(
                 f"stage {stage!r} has no snapshot v{version} (available: {have})"
             )
         entry = match[0]
-    return spark.read.parquet(os.path.join(workdir, stage, entry["path"]))
+    return _read_stage(spark, os.path.join(workdir, stage, entry["path"]), entry.get("schema"))
 
 
 def expire_snapshots(workdir: str, stage: str, keep: int = 1) -> list[int]:
@@ -127,6 +134,15 @@ def _load_manifest(workdir: str, stage: str) -> dict | None:
         with open(p) as f:
             return json.load(f)
     return None
+
+
+def _read_stage(spark: SparkSession, data_dir: str, schema: dict | None) -> DataFrame:
+    """Read a checkpoint with its recorded schema (no inference job);
+    ``schema=None`` (written before schemas were recorded) infers it."""
+    reader = spark.read
+    if schema is not None:
+        reader = reader.schema(StructType.fromJson(schema))
+    return reader.parquet(data_dir)
 
 
 def _file_row_counts(data_dir: str) -> dict[str, int]:
@@ -169,7 +185,7 @@ def run_pipeline(
             and prior.get("inputs") == input_sig
             and os.path.isdir(data_dir)
         ):
-            results[st.name] = spark.read.parquet(data_dir)
+            results[st.name] = _read_stage(spark, data_dir, prior.get("schema"))
             manifests[st.name] = prior["manifest_hash"]
             continue
 
@@ -193,6 +209,7 @@ def run_pipeline(
             "files": per_file,
             "wall_sec": round(wall, 3),
             "written_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+            "schema": out.schema.jsonValue(),
         }
         mh = hashlib.sha256(json.dumps(manifest, sort_keys=True).encode()).hexdigest()[:16]
         manifest["manifest_hash"] = mh
@@ -205,11 +222,12 @@ def run_pipeline(
                 "rows": manifest["rows"],
                 "written_at": manifest["written_at"],
                 "path": rel,
+                "schema": manifest["schema"],
             }
         )
         with open(_snap_log_path(workdir, st.name), "w") as f:
             json.dump(snaps, f, indent=2)
-        results[st.name] = spark.read.parquet(data_dir)
+        results[st.name] = _read_stage(spark, data_dir, manifest["schema"])
         manifests[st.name] = mh
 
     return results

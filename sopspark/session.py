@@ -2,6 +2,14 @@
 
 Defaults chosen for the 100 TB design point (AQE on, skew-join on,
 Arrow-batched pandas UDFs) while remaining correct on local[N].
+
+PySpark's DataFrame call-site capture (``spark.python.sql.dataFrameDebugging
+.enabled``) is off: with it on, every ``F.col`` and every ``Column`` method
+walks the Python stack and makes two py4j round trips, and the first call
+imports IPython (~0.7 s and ~20 MB on a cold driver). The only thing lost
+is the Python file:line in an analysis error's "DataFrame query context";
+pass ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``
+to :func:`get_spark` to get it back.
 """
 
 from __future__ import annotations
@@ -99,6 +107,11 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
     On a real cluster you would omit ``master`` and let spark-submit set it;
     every other conf here is cluster-appropriate as-is.
+
+    Call-site capture is off (see the module docstring); ``extra_conf``
+    overrides any default here, e.g.
+    ``{"spark.python.sql.dataFrameDebugging.enabled": "true"}`` puts the
+    Python call site back into analysis errors.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if master is None:
@@ -125,6 +138,8 @@ def get_spark(
         # rows are small, so a batch stays ~tens of MB.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.sql.session.timeZone", "UTC")
+        # no per-Column Python stack walk + py4j round trips (module docstring)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
     )

@@ -358,7 +358,10 @@ def _parse_star_rows(lines: pd.Series, src: pd.Series) -> pd.DataFrame:
             rows.append(flat + [None, sc])
         except (NtStarError, RecursionError) as e:
             rows.append([None] * 16 + [f"parse error: {e}", sc])
-    return pd.DataFrame(rows, columns=_FLAT_COLS + ["err", "src"])
+    # the dtypes _parse_fast gives, so that concatenating the two never
+    # depends on which columns happen to be all-NA
+    kinds = {f"{t}_kind": "Int8" for t in ("s", "p", "o", "g")}
+    return pd.DataFrame(rows, columns=_FLAT_COLS + ["err", "src"], dtype=object).astype(kinds)
 
 
 def _parse_batch(pdf: pd.DataFrame) -> pd.DataFrame:

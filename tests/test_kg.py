@@ -167,10 +167,68 @@ def test_submit_entrypoint_runs_and_resumes(spark, tmp_path):
     assert again == first
 
 
+def _jobs(spark, group, fn):
+    """(``fn()``, the number of Spark jobs it scheduled), counted through a
+    job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(prop, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_pipeline_checkpoint_rereads_schedule_no_job(spark, tmp_path):
+    """A stage's checkpoint is read back with its recorded schema: a first
+    run schedules one job per stage (its write), a resume none. A manifest
+    without a schema (written before schemas were recorded) still resumes,
+    inferring it."""
+    import json
+
+    from sopspark.kg.pipeline import Stage, run_pipeline, snapshots
+
+    wd = str(tmp_path / "wd")
+    src = spark.range(20).withColumnRenamed("id", "x")
+
+    def plus(spark_, inputs, dep, k):
+        return inputs[dep].select((F.col("x") + k).alias("x"))
+
+    stages = [
+        Stage("a", plus, deps=["src"], params={"dep": "src", "k": 1}),
+        Stage("b", plus, deps=["a"], params={"dep": "a", "k": 10}),
+    ]
+    run = lambda: run_pipeline(spark, wd, stages, {"src": src})  # noqa: E731
+    first, jobs = _jobs(spark, "pipeline-first-run", run)
+    assert jobs == len(stages)
+    want = sorted(r.x for r in first["b"].collect())
+    assert want == list(range(11, 31))
+
+    resumed, jobs = _jobs(spark, "pipeline-resume", run)
+    assert jobs == 0
+    assert sorted(r.x for r in resumed["b"].collect()) == want
+    assert resumed["b"].schema == first["b"].schema
+
+    man_path = os.path.join(wd, "b", "_lineage.json")
+    man = json.load(open(man_path))
+    assert man["schema"] == first["b"].schema.jsonValue()
+    del man["schema"]
+    with open(man_path, "w") as f:
+        json.dump(man, f)
+    legacy, jobs = _jobs(spark, "pipeline-resume-no-schema", run)
+    assert jobs == 1  # the schema-inference job
+    assert [s["version"] for s in snapshots(wd, "b")] == [1]
+    assert sorted(r.x for r in legacy["b"].collect()) == want
+    assert legacy["b"].schema == first["b"].schema
+
+
 def test_snapshot_time_travel_and_expire(spark, tmp_path):
     """Every re-materialization appends a snapshot: time travel reads old
-    versions, handles from earlier runs stay valid, and expire_snapshots
-    drops all but the newest."""
+    versions (with the schema each entry records, or by inference for an
+    entry without one), handles from earlier runs stay valid, and
+    expire_snapshots drops all but the newest."""
+    import json
     from pyspark.sql import functions as F
 
     from sopspark.kg.pipeline import (
@@ -206,6 +264,21 @@ def test_snapshot_time_travel_and_expire(spark, tmp_path):
     assert sorted(r.y for r in read_snapshot(spark, wd, "double", version=2).collect())[:3] == [0, 3, 6]
     # default = current
     assert sorted(r.y for r in read_snapshot(spark, wd, "double").collect())[:3] == [0, 3, 6]
+
+    # each entry records the stage output's schema, and time travel reads
+    # with it (no job); the read is nullable, as an inferred one is
+    assert [s["schema"] for s in log] == [double(spark, {"src": src}).schema.jsonValue()] * 2
+    schema = read_snapshot(spark, wd, "double").schema
+    read_v1 = lambda: read_snapshot(spark, wd, "double", version=1)  # noqa: E731
+    assert _jobs(spark, "snapshot-read", read_v1)[1] == 0
+    # an entry written before schemas were recorded is read by inference
+    del log[0]["schema"]
+    with open(os.path.join(wd, "double", "_snapshots.json"), "w") as f:
+        json.dump(log, f)
+    v1_inferred, jobs = _jobs(spark, "snapshot-read-no-schema", read_v1)
+    assert jobs == 1
+    assert v1_inferred.schema == schema
+    assert sorted(r.y for r in v1_inferred.collect())[:3] == [0, 2, 4]
 
     # retention drops v1; reading it now fails with the available list
     assert expire_snapshots(wd, "double", keep=1) == [1]

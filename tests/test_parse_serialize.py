@@ -756,6 +756,32 @@ def _fixture_lines(fixtures_dir) -> list[str]:
     return lines
 
 
+def test_parse_batch_mixed_quoted_lines_keep_dtypes():
+    """Driver only: a batch of plain lines and ``<<`` lines (one parsed,
+    one an err row) concatenates with the same column dtypes as a plain
+    batch, so pandas has no all-NA column to warn about."""
+    import warnings
+
+    import pandas as pd
+
+    from sopspark.sources import ntriples
+
+    lines = [
+        "<http://e/s> <http://e/p> <http://e/o> .",
+        '<< <http://e/s> <http://e/p> <http://e/o> >> <http://e/q> "x" <http://e/g> .',
+        "<< <http://e/s> <http://e/p> >> <http://e/q> <http://e/o> .",
+    ]
+    pdf = pd.DataFrame({"value": lines, "src": ["0", "1", "2"]})
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", FutureWarning)
+        out = ntriples._parse_batch(pdf)
+    plain = ntriples._parse_batch(pdf.iloc[:1])
+    assert out.dtypes.to_dict() == plain.dtypes.to_dict()
+    assert out["s_kind"].tolist() == [0, 3, pd.NA]
+    assert out["g_kind"].tolist() == [pd.NA, 0, pd.NA]
+    assert out["err"].notna().tolist() == [False, False, True]
+
+
 def test_parse_lines_df_matches_pandas_parser(spark, fixtures_dir):
     """Row for row, ``parse_lines_df`` (Catalyst for plain lines, the
     pandas parser in ``mapInPandas`` for the rest) gives what
