@@ -1,19 +1,27 @@
-"""Turn assembly + batched mention / (s, p, o) triple extraction.
+r"""Turn assembly + mention / (s, p, o) triple extraction, both in Catalyst.
 
 This replaces the reference's per-quad ``parse`` stage with the graft's
 text→triples stage (north_star): transcripts come in as an Iceberg/parquet
 table with arbitrary row order; turns are assembled under a stable
-``(conv_id, turn_idx)`` window ordering (the input_hint invariant), then a
-**vectorized pandas extractor** runs per Arrow batch inside ``mapInPandas``
-— rule-based templates compiled once per executor, ``Series.str.findall``
-style matching, no per-row Python interpretation of the rules.
+``(conv_id, turn_idx)`` window ordering (the input_hint invariant), then the
+six rule-based templates run as **one SQL projection** over the assembled
+turns: per template a ``contains`` prefilter, ``regexp_extract_all`` for the
+two groups, and a ``transform`` into mention structs; the arrays are
+concatenated and exploded once (``inline``). No Python worker runs.
+
+Regex dialect: the templates are Java regexes. A name must not follow an
+ASCII letter, digit or ``_`` (an explicit lookbehind, not ``\b``, whose
+reading of non-ASCII letters changed between JDK 17 and 19), and ages are
+ASCII digits (Java's ``\d``). That is how Python's ``re`` reads the same
+templates under ``re.ASCII``, and how RE2 reads the DuckDB oracle's
+``\b``/``\d``; Python's default Unicode ``\d`` would also take ``٤٢``.
 
 Scale notes:
   * the only shuffle is the window's hash partition by ``conv_id`` —
-    exactly one exchange, reused by the ``lag`` and the grouped extraction;
-    conversations are small (≤ dozens of turns) so no per-key skew.
-  * extraction is embarrassingly parallel after the window; output rows are
-    mention-level and explode ~2-3× the turn count.
+    exactly one exchange, reused by the ``lag``; conversations are small
+    (≤ dozens of turns) so no per-key skew.
+  * extraction is a map after the window; output rows are mention-level
+    and explode ~2-3× the turn count.
   * cross-turn coreference ("They work at X.") consumes the previous
     turn's last person alias via ``lag`` over the window — this is why
     assembly must precede extraction and why
@@ -24,22 +32,24 @@ Scale notes:
 
 from __future__ import annotations
 
-import re
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from sopspark.kg.vocab import AGE, KNOWS, LIVES_IN, WORKS_AT
 
-# extraction templates (compiled once per executor import)
-RE_KNOWS = re.compile(r"\b([A-Z][a-z]+) knows ([A-Z][a-z]+)\.")
-RE_WORKS = re.compile(r"\b([A-Z][a-z]+) works at ([A-Z][A-Za-z ]+?)\.")
-RE_LIVES = re.compile(r"\b([A-Z][a-z]+) lives in ([A-Z][a-z]+)\.")
-RE_AGE = re.compile(r"\b([A-Z][a-z]+) is (\d+) years old\.")
-RE_PRON_WORKS = re.compile(r"\bThey work at ([A-Z][A-Za-z ]+?)\.")
-RE_PRON_LIVES = re.compile(r"\bThey live in ([A-Z][a-z]+)\.")
+_B = r"(?<![0-9A-Za-z_])"  # ASCII word boundary before a name (module docstring)
+
+# (m_id base, prefilter needle, Java regex, predicate, object etype — None
+# for a literal object, pronoun template: subject = the previous turn's
+# last person alias, first match only)
+TEMPLATES = (
+    (0, " knows ", rf"{_B}([A-Z][a-z]+) knows ([A-Z][a-z]+)\.", KNOWS, "person", False),
+    (1, " works at ", rf"{_B}([A-Z][a-z]+) works at ([A-Z][A-Za-z ]+?)\.", WORKS_AT, "org", False),
+    (2, " lives in ", rf"{_B}([A-Z][a-z]+) lives in ([A-Z][a-z]+)\.", LIVES_IN, "place", False),
+    (3, " years old", rf"{_B}([A-Z][a-z]+) is (\d+) years old\.", AGE, None, False),
+    (4, "They work at ", rf"{_B}They work at ([A-Z][A-Za-z ]+?)\.", WORKS_AT, "org", True),
+    (5, "They live in ", rf"{_B}They live in ([A-Z][a-z]+)\.", LIVES_IN, "place", True),
+)
 
 
 def assemble_turns(transcripts: DataFrame) -> DataFrame:
@@ -49,9 +59,9 @@ def assemble_turns(transcripts: DataFrame) -> DataFrame:
     (the previous turn's last person-alias mention — the pronoun
     antecedent) under ``Window.partitionBy(conv_id).orderBy(turn_idx, ts)``
     — the stable ordering the input_hint demands. The antecedent is
-    extracted JVM-side (``regexp_extract_all`` inside codegen) so the
-    pandas extraction UDF ships one short string per turn instead of the
-    whole previous text — roughly half the Arrow volume on the hot path.
+    extracted per turn (``regexp_extract_all``) before the ``lag``, so the
+    window carries one short string per turn instead of the whole previous
+    text.
     """
     from sopspark.kg.synth import PERSON_ALIAS_RE
 
@@ -70,106 +80,42 @@ MENTION_SCHEMA = (
 )
 
 
-_OUT_COLS = ["conv_id", "turn_idx", "m_id", "s_alias", "p", "o_alias", "o_lit", "o_etype"]
-
-
-def _extract_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Fully vectorized template extraction for one Arrow batch of turns:
-    one ``Series.str.extractall`` per template (regex loop runs in pandas'
-    C matcher), match-frame assembly by positional index take — NO
-    per-row Python. m_id = template_base + match ordinal (unique per
-    (turn, p) occurrence, which is all linking needs)."""
-    pdf = pdf.reset_index(drop=True)
-    texts = pdf["text"].fillna("")
-    conv = pdf["conv_id"]
-    tidx = pdf["turn_idx"].astype("int32")
-    parts: list[pd.DataFrame] = []
-
-    def frame(ridx, m_id, s_alias, p, o_alias, o_lit, o_etype):
-        parts.append(
-            pd.DataFrame(
-                {
-                    "conv_id": conv.iloc[ridx].to_numpy(),
-                    "turn_idx": tidx.iloc[ridx].to_numpy(),
-                    "m_id": m_id,
-                    "s_alias": s_alias,
-                    "p": p,
-                    "o_alias": o_alias,
-                    "o_lit": o_lit,
-                    "o_etype": o_etype,
-                }
-            )
+def _template_sql(
+    base: int, needle: str, pattern: str, p: str, etype: str | None, pronoun: bool
+) -> str:
+    """One template's mentions in a turn, as an array of mention structs
+    (empty when the prefilter or the regex finds nothing, or ``text`` is
+    NULL). ``m_id`` = base·4096 + match ordinal: unique per (turn, p)
+    occurrence, which is all linking needs."""
+    rx = f"r'{pattern}'"
+    if pronoun:
+        cond = f"prev_ante IS NOT NULL AND contains(text, '{needle}')"
+        pairs = (
+            f"transform(slice(regexp_extract_all(text, {rx}, 1), 1, 1), "
+            "o -> named_struct('s', prev_ante, 'o', o))"
         )
-
-    def extractall(needle: str, template: re.Pattern) -> pd.DataFrame:
-        # C-level substring prefilter: most turns match no template, and
-        # `contains(..., regex=False)` is ~5x cheaper than the regex, so
-        # running extractall only on candidate rows halves the stage. The
-        # surviving MultiIndex keeps the original positional labels, so the
-        # .iloc takes below are unaffected.
-        sub = texts[texts.str.contains(needle, regex=False)]
-        if sub.empty:
-            return sub.to_frame().iloc[0:0]
-        return sub.str.extractall(template)
-
-    for t_base, template, needle, pred, o_etype in (
-        (0, RE_KNOWS, " knows ", KNOWS, "person"),
-        (1, RE_WORKS, " works at ", WORKS_AT, "org"),
-        (2, RE_LIVES, " lives in ", LIVES_IN, "place"),
-    ):
-        ext = extractall(needle, template)
-        if ext.empty:
-            continue
-        ridx = ext.index.get_level_values(0)
-        m_id = (t_base * 4096 + ext.index.get_level_values("match")).astype("int32")
-        frame(ridx, m_id, ext[0].to_numpy(), pred, ext[1].to_numpy(), None, o_etype)
-
-    ext = extractall(" years old", RE_AGE)
-    if not ext.empty:
-        ridx = ext.index.get_level_values(0)
-        m_id = (3 * 4096 + ext.index.get_level_values("match")).astype("int32")
-        frame(ridx, m_id, ext[0].to_numpy(), AGE, None, ext[1].to_numpy(), None)
-
-    # pronoun coreference: subject = the previous turn's last person alias,
-    # already extracted JVM-side by assemble_turns (prev_ante)
-    ante = pdf["prev_ante"]
-    for t_base, template, needle, pred, o_etype in (
-        (4, RE_PRON_WORKS, "They work at ", WORKS_AT, "org"),
-        (5, RE_PRON_LIVES, "They live in ", LIVES_IN, "place"),
-    ):
-        ext = extractall(needle, template)
-        if ext.empty:
-            continue
-        # first match per turn only (parity with the search() semantics)
-        ext = ext[ext.index.get_level_values("match") == 0]
-        ridx = ext.index.get_level_values(0)
-        subs = ante.iloc[ridx]
-        keep = subs.notna().to_numpy()
-        if not keep.any():
-            continue
-        ridx = ridx[keep]
-        frame(
-            ridx,
-            pd.Series(t_base * 4096, index=range(len(ridx)), dtype="int32").to_numpy(),
-            subs.to_numpy()[keep],
-            pred,
-            ext[0].to_numpy()[keep],
-            None,
-            o_etype,
+    else:
+        cond = f"contains(text, '{needle}')"
+        pairs = (
+            f"zip_with(regexp_extract_all(text, {rx}, 1), regexp_extract_all(text, {rx}, 2), "
+            "(s, o) -> named_struct('s', s, 'o', o))"
         )
+    null = "CAST(NULL AS STRING)"
+    o_alias, o_lit, o_etype = ("m.o", null, f"'{etype}'") if etype else (null, "m.o", null)
+    mention = (
+        f"named_struct('m_id', {base * 4096} + i, 's_alias', m.s, 'p', '{p}', "
+        f"'o_alias', {o_alias}, 'o_lit', {o_lit}, 'o_etype', {o_etype})"
+    )
+    return f"CASE WHEN {cond} THEN transform({pairs}, (m, i) -> {mention}) ELSE array() END"
 
-    if not parts:
-        return pd.DataFrame({c: pd.Series(dtype="object") for c in _OUT_COLS})
-    return pd.concat(parts, ignore_index=True)[_OUT_COLS]
+
+# one SQL string, parsed per call: a Column-API build of the same plan
+# costs several times more py4j round trips on the driver
+_MENTIONS_SQL = "inline(concat({}))".format(", ".join(_template_sql(*t) for t in TEMPLATES))
 
 
 def extract_triples(assembled: DataFrame) -> DataFrame:
-    """Assembled turns → mention-level candidate rows (pre-linking)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield _extract_batch(pdf)
-
-    cols = ["conv_id", "turn_idx", "text", "prev_ante"]
-    return assembled.select(*cols).mapInPandas(run, schema=MENTION_SCHEMA)
+    """Assembled turns → mention-level candidate rows (pre-linking), in
+    ``MENTION_SCHEMA``: one row per template match, none for a turn with
+    no match."""
+    return assembled.selectExpr("conv_id", "turn_idx", _MENTIONS_SQL)

@@ -6,10 +6,15 @@ tool: string, ts: timestamp)``. Sentence templates embed entity mentions so
 the expected (s, p, o) triple set is derivable in closed form — the oracle
 for the P/R ≥ 0.95 gate.
 
-Generation is seeded (default 42) and **distributed**: conversations are
-generated on executors from their conv index (``spark.range`` →
-``mapInPandas``), so the corpus scales to any size without a driver loop;
-the same (seed, conv index) always yields the same conversation.
+Generation is seeded (default 42) and deterministic per conversation: the
+same (seed, conv index) always yields the same conversation, wherever it is
+generated. A corpus of at most ``DRIVER_CONVS`` conversations (with no
+explicit ``partitions``) is generated on the driver and returned as driver
+literals (``session.local_df``), so building it starts no Python worker;
+a larger one, or any call with ``partitions``, is generated on executors
+from the conv index (``spark.range`` → ``mapInPandas``) and scales to any
+size without a driver loop. Both give the same rows in the same order
+(``ts`` under the UTC session time zone that ``get_spark`` sets).
 
 Skew by construction: the alias "Bob" is drawn with ~10× weight, so one
 entity receives ≥10% of all mentions — exercising the salted/AQE skew path
@@ -237,10 +242,29 @@ TRANSCRIPT_SCHEMA = (
 EXPECTED_SCHEMA = "s string, p string, o string"
 
 
+# largest corpus generated on the driver. On local[4], 10k conversations
+# took 1.7 s there and on warm executors alike, against 3.2 s on executors
+# whose Python workers had to start; at 30k warm executors were faster
+# (3.4 vs 4.3 s). CHANGES.md has the measurement.
+DRIVER_CONVS = 10_000
+
+
 def synth_corpus(
     spark: SparkSession, n_convs: int, seed: int = 42, partitions: int | None = None
 ) -> tuple[DataFrame, DataFrame]:
-    """Generate (transcripts, expected_triples) DataFrames on executors."""
+    """Generate (transcripts, expected_triples) DataFrames: driver literals
+    up to ``DRIVER_CONVS`` conversations, otherwise (or with explicit
+    ``partitions``) on executors."""
+    if partitions is None and n_convs <= DRIVER_CONVS:
+        from sopspark.session import local_df
+
+        turns: list[tuple] = []
+        expected: list[tuple] = []
+        for conv_i in range(n_convs):
+            t, e = _gen_conversation(conv_i, seed)
+            turns.extend(tuple(row.values()) for row in t)
+            expected.extend(e)
+        return local_df(spark, turns, TRANSCRIPT_SCHEMA), local_df(spark, expected, EXPECTED_SCHEMA)
     if partitions is None:
         # enough splits to balance the cluster (4 waves) but no more: at a
         # fixed ~2k convs/split a 1M-conv corpus becomes 500 tasks whose

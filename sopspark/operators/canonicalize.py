@@ -101,24 +101,28 @@ def canonicalize(
     )
 
     bnq = quads.where(_has_bnode())
-    n_bnq = bnq.limit(driver_threshold + 1).count()
-    if n_bnq == 0:
+    # one read decides the path and, under the threshold, is the driver
+    # kernel's input; above it the rows are dropped and the component path
+    # reads the bnode quads again
+    rows = bnq.limit(driver_threshold + 1).collect()
+    if not rows:
         return ground_lines.orderBy("line")
 
-    if n_bnq <= driver_threshold:
-        bn_lines = _driver_c14n(bnq, hash_name, depth_factor, permutation_limit)
+    if len(rows) <= driver_threshold:
+        bn_lines = _driver_c14n(bnq.sparkSession, rows, hash_name, depth_factor, permutation_limit)
     else:
         bn_lines = _component_c14n(bnq, hash_name, depth_factor, permutation_limit)
     return ground_lines.unionByName(bn_lines).orderBy("line")
 
 
-def _driver_c14n(bnq: DataFrame, hash_name, depth_factor, permutation_limit) -> DataFrame:
+def _driver_c14n(spark, rows, hash_name, depth_factor, permutation_limit) -> DataFrame:
+    """RDFC-1.0 over collected bnode-quad ``rows`` on the driver."""
     from sopspark.functions.rdfc10 import canonicalize_quads
     from sopspark.session import local_df
 
-    pyquads = [_row_to_pyquad(r) for r in bnq.collect()]
+    pyquads = [_row_to_pyquad(r) for r in rows]
     lines = canonicalize_quads(pyquads, hash_name, depth_factor, permutation_limit)
-    return local_df(bnq.sparkSession, [(l,) for l in lines], "line string")
+    return local_df(spark, [(l,) for l in lines], "line string")
 
 
 def _component_c14n(bnq: DataFrame, hash_name, depth_factor, permutation_limit) -> DataFrame:

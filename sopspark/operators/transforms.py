@@ -76,9 +76,9 @@ def _resolver(base: str):
 
 
 def _resolve_series(values: pd.Series, base: str) -> pd.Series:
-    absolute = values.str.match(r"^[A-Za-z][A-Za-z0-9+.-]*:")
+    absolute = values.str.match(r"^[A-Za-z][A-Za-z0-9+.-]*:", na=False)
     out = values.copy()
-    rel = values.notna() & ~absolute.fillna(False)
+    rel = values.notna() & ~absolute
     if rel.any():
         out[rel] = values[rel].map(lambda v: urljoin(base, v))
     return out

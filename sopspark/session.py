@@ -10,6 +10,13 @@ imports IPython (~0.7 s and ~20 MB on a cold driver). The only thing lost
 is the Python file:line in an analysis error's "DataFrame query context";
 pass ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``
 to :func:`get_spark` to get it back.
+
+Case mapping (``lower``/``upper``) uses the JVM's
+``String.toLowerCase``/``toUpperCase``, not ICU
+(``spark.sql.icu.caseMappings.enabled=false``, the mapping Spark 3 used):
+ICU's tables take about 2 s of driver time to build on the first
+``lower`` of a JVM. Non-ASCII case mapping follows the JVM default locale;
+under a root or English locale it equals Python's ``str.lower``/``upper``.
 """
 
 from __future__ import annotations
@@ -108,7 +115,8 @@ def get_spark(
     On a real cluster you would omit ``master`` and let spark-submit set it;
     every other conf here is cluster-appropriate as-is.
 
-    Call-site capture is off (see the module docstring); ``extra_conf``
+    Call-site capture and ICU case mapping are off (see the module
+    docstring); ``extra_conf``
     overrides any default here, e.g.
     ``{"spark.python.sql.dataFrameDebugging.enabled": "true"}`` puts the
     Python call site back into analysis errors.
@@ -132,14 +140,19 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # 64k-row Arrow batches amortize per-batch serialization overhead in
-        # the pandas-UDF extraction path (~+10-25% KG throughput at local[4],
-        # measured interleaved vs the 10k default; won every trial). Text
-        # rows are small, so a batch stays ~tens of MB.
+        # 64k-row Arrow batches amortize per-batch serialization overhead on
+        # the paths that still ship rows to Python: the N-Triples slow-line
+        # parser, IRI rewriting, canonicalize's component kernel, the text
+        # kernels (dedup, similarity, tokenize) and large synthetic corpora.
+        # It was measured on the former pandas KG extraction (~+10-25%
+        # throughput at local[4] vs the 10k default, interleaved). Text rows
+        # are small, so a batch stays ~tens of MB.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.sql.session.timeZone", "UTC")
         # no per-Column Python stack walk + py4j round trips (module docstring)
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # JVM case mapping: no ICU table build on the first lower() (module docstring)
+        .config("spark.sql.icu.caseMappings.enabled", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
     )

@@ -2,6 +2,7 @@
 order-stability invariant, sameAs connected components, and resumability."""
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -10,6 +11,7 @@ from sopspark.kg.canon import materialize_graph, sameas_closure, skolemize
 from sopspark.kg.extract import assemble_turns, extract_triples
 from sopspark.kg.link import entity_histogram, link_entities
 from sopspark.kg.synth import alias_df, sameas_df, synth_corpus
+from sopspark.kg.vocab import AGE, KNOWS, LIVES_IN, WORKS_AT
 from sopspark.plans.graph import connected_components
 from sopspark.terms import BNODE
 
@@ -39,6 +41,88 @@ def test_extraction_precision_recall(spark, corpus):
     recall = tp / len(exp) if exp else 0.0
     assert precision >= 0.95, f"precision {precision:.4f}; sample fp: {list(got - exp)[:5]}"
     assert recall >= 0.95, f"recall {recall:.4f}; sample fn: {list(exp - got)[:5]}"
+
+
+# The extractor's six templates, read by Python's ``re`` under re.ASCII:
+# ``\b`` is an ASCII word boundary and ``\d`` an ASCII digit, as the
+# Catalyst extractor and the DuckDB oracle (RE2) read them. Under Python's
+# default Unicode reading, "éBob knows Alice." would give no mention and
+# "Bob is ٤٢ years old." would give the age "٤٢"; here the first gives
+# Bob knows Alice and the second nothing.
+_REF_TEMPLATES = (
+    (0, r"\b([A-Z][a-z]+) knows ([A-Z][a-z]+)\.", KNOWS, "person", False),
+    (1, r"\b([A-Z][a-z]+) works at ([A-Z][A-Za-z ]+?)\.", WORKS_AT, "org", False),
+    (2, r"\b([A-Z][a-z]+) lives in ([A-Z][a-z]+)\.", LIVES_IN, "place", False),
+    (3, r"\b([A-Z][a-z]+) is (\d+) years old\.", AGE, None, False),
+    (4, r"\bThey work at ([A-Z][A-Za-z ]+?)\.", WORKS_AT, "org", True),
+    (5, r"\bThey live in ([A-Z][a-z]+)\.", LIVES_IN, "place", True),
+)
+
+
+def _reference_mentions(turns) -> list[tuple]:
+    """``extract_triples`` written as a loop over ``re.finditer``: every
+    match of a pair template, the first match of a pronoun template when
+    the turn has an antecedent; ``m_id`` = template·4096 + match ordinal."""
+    out = []
+    for conv_id, turn_idx, text, prev_ante in turns:
+        for base, pattern, p, etype, pronoun in _REF_TEMPLATES:
+            matches = list(re.finditer(pattern, text or "", re.ASCII))
+            if pronoun:
+                if prev_ante is not None and matches:
+                    out.append((conv_id, turn_idx, base * 4096, prev_ante, p, matches[0][1], None, etype))
+                continue
+            for i, m in enumerate(matches):
+                o_alias, o_lit = (m[2], None) if etype else (None, m[2])
+                out.append((conv_id, turn_idx, base * 4096 + i, m[1], p, o_alias, o_lit, etype))
+    return sorted(out, key=repr)
+
+
+def _extracted(assembled) -> list[tuple]:
+    return sorted((tuple(r) for r in extract_triples(assembled).collect()), key=repr)
+
+
+def test_extract_triples_matches_reference_on_corpus(spark, corpus):
+    transcripts, _ = corpus
+    assembled = assemble_turns(transcripts).select("conv_id", "turn_idx", "text", "prev_ante")
+    want = _reference_mentions(assembled.collect())
+    assert len(want) > 1000
+    assert _extracted(assembled) == want
+
+
+def test_extract_triples_edge_cases(spark):
+    """NULL text, repeated templates, a second pronoun sentence, a NULL
+    antecedent, and non-ASCII letters and digits next to a name."""
+    from sopspark.session import local_df
+
+    turns = [
+        ("c", 0, None, "Bob"),
+        ("c", 1, "Bob knows Ann. Bob knows Ann. Di works at Acme Corp. Ed works at Globex.", None),
+        ("c", 2, "They work at Acme Corp. They work at Globex. Ann knows Bob.", "Bob"),
+        ("c", 3, "They live in Paris.", None),
+        ("c", 4, "éBob knows Alice. Bob is ٤٢ years old. Ann is 4٢ years old.", None),
+        ("c", 5, "٣Bob knows Alice. xBob knows Alice. _Bob knows Alice. Ann is 42 years old.", None),
+        ("c", 6, "Zoë knows Bob. Bob knows Aliceé. xThey live in Oslo.", "Ann"),
+        ("c", 7, "They live in Oslo. They live in Rome.", "Di"),
+        ("c", 8, "", "Di"),
+    ]
+    assembled = local_df(spark, turns, "conv_id string, turn_idx int, text string, prev_ante string")
+    got = _extracted(assembled)
+    assert got == _reference_mentions(turns)
+    assert sorted(((t, m, s, oa, ol) for _c, t, m, s, _p, oa, ol, _e in got), key=repr) == sorted(
+        [
+            (1, 0, "Bob", "Ann", None),
+            (1, 1, "Bob", "Ann", None),
+            (1, 4096, "Di", "Acme Corp", None),
+            (1, 4097, "Ed", "Globex", None),
+            (2, 0, "Ann", "Bob", None),
+            (2, 4 * 4096, "Bob", "Acme Corp", None),
+            (4, 0, "Bob", "Alice", None),
+            (5, 0, "Bob", "Alice", None),
+            (5, 3 * 4096, "Ann", None, "42"),
+            (7, 5 * 4096, "Di", "Oslo", None),
+        ],
+        key=repr,
+    )
 
 
 def test_order_invariance(spark, corpus):

@@ -116,6 +116,29 @@ def test_dedup(spark):
     assert dedup(df).count() == 2
 
 
+def test_resolve_series_null_relative_absolute():
+    """The pandas IRI resolver keeps NULLs and absolute IRIs and resolves
+    relative ones, without pandas' object-downcasting FutureWarning."""
+    import warnings
+
+    import pandas as pd
+
+    from sopspark.operators.transforms import _resolve_series
+
+    values = pd.Series([None, "a/b", "http://x/y", "../c", "urn:z", "#f"], dtype=object)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", FutureWarning)
+        out = _resolve_series(values, "http://base.org/dir/x")
+    assert out.tolist() == [
+        None,
+        "http://base.org/dir/a/b",
+        "http://x/y",
+        "http://base.org/c",
+        "urn:z",
+        "http://base.org/dir/x#f",
+    ]
+
+
 def test_absolutize_relativize(spark):
     df = _lines(spark, "<a/b> <http://e/p> <c> .")
     ab = absolutize(df, "http://base.org/dir/x")

@@ -468,6 +468,19 @@ CLEAN_NT = [
 ]
 
 
+def _jobs(spark, group, fn):
+    """(``fn()``, the number of Spark jobs it scheduled), counted through a
+    job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(prop, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def _parse_file(spark, tmp_path, lines):
     """Parse ``lines`` split over two files; assert that parsing (which
     runs the slow-line probe) scheduled exactly one Spark job over both."""
@@ -477,14 +490,10 @@ def _parse_file(spark, tmp_path, lines):
     paths = [tmp_path / "a.nt", tmp_path / "b.nt"]
     for path, part in zip(paths, (lines[:half], lines[half:])):
         path.write_text("\n".join(part) + "\n", encoding="utf-8")
-    sc, group = spark.sparkContext, f"parse_probe_{tmp_path.name}"
-    sc.setJobGroup(group, group)
-    try:
-        df = parse_ntriples(spark, [str(p) for p in paths])
-    finally:
-        for prop in ("spark.jobGroup.id", "spark.job.description"):
-            sc.setLocalProperty(prop, None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    df, n_jobs = _jobs(
+        spark, f"parse_probe_{tmp_path.name}", lambda: parse_ntriples(spark, [str(p) for p in paths])
+    )
+    assert n_jobs == 1
     return df
 
 
@@ -538,7 +547,80 @@ def test_canonicalize_driver_path_is_local(spark):
         [((BNODE, "x", None, None), (IRI, "http://e/p", None, None), (BNODE, "y", None, None), None)],
         ", ".join(f"{c} {TERM_SQL_TYPE}" for c in "spog"),
     )
-    out = _driver_c14n(quads, "sha256", 1.0, 6)
+    out = _driver_c14n(spark, quads.collect(), "sha256", 1.0, 6)
     assert is_local(out)
     (line,) = [r.line for r in out.collect()]
     assert sorted(re.findall(r"_:c14n\d", line)) == ["_:c14n0", "_:c14n1"]
+
+
+def test_canonicalize_reads_bnode_quads_once(spark):
+    """One ``limit().collect()`` both picks the driver path and feeds its
+    kernel: parse probe, that read, the ground-quad sort and the collect
+    schedule at most 7 jobs (10 when the bnode quads were counted, then
+    collected)."""
+    from sopspark.operators.canonicalize import canonicalize
+    from sopspark.sources.ntriples import parse_lines_df
+
+    lines = [
+        "_:a <http://e/p> _:b .",
+        "_:b <http://e/p> _:a .",
+        '<http://e/s> <http://e/p> "x" .',
+        "_:c <http://e/q> <http://e/o> .",
+    ]
+    src = spark.createDataFrame([(l,) for l in lines], ["value"])
+    rows, n_jobs = _jobs(spark, "c14n_jobs", lambda: canonicalize(parse_lines_df(src)).collect())
+    assert [r.line for r in rows] == [
+        '<http://e/s> <http://e/p> "x" .',
+        "_:c14n0 <http://e/q> <http://e/o> .",
+        "_:c14n1 <http://e/p> _:c14n2 .",
+        "_:c14n2 <http://e/p> _:c14n1 .",
+    ]
+    assert n_jobs <= 7, n_jobs
+
+
+def test_kg_pipeline_plans_no_python(spark, tmp_path, monkeypatch):
+    """No stage of ``run_kg_pipeline`` plans a Python worker: extraction is
+    a Catalyst projection, and a small synthetic corpus is written from
+    driver literals."""
+    from sopspark.kg import pipeline
+    from sopspark.kg.synth import write_corpus
+
+    plans = {}
+    kg_stages = pipeline.kg_stages
+
+    def traced_stages(conv_ns=None):
+        stages = kg_stages(conv_ns)
+        for st in stages:
+            def fn(spark_, inputs, _fn=st.fn, _name=st.name, **kw):
+                out = _fn(spark_, inputs, **kw)
+                plans[_name] = _physical(out)
+                return out
+
+            st.fn = fn
+        return stages
+
+    monkeypatch.setattr(pipeline, "kg_stages", traced_stages)
+    corpus = str(tmp_path / "corpus")
+    write_corpus(spark, corpus, n_convs=40, seed=3)
+    pipeline.run_kg_pipeline(spark, corpus, str(tmp_path / "wd"))
+    assert set(plans) == {"assemble", "extract", "link", "sameas_cc", "graph", "canonical"}
+    for name, plan in plans.items():
+        assert not [n for n in PYTHON_NODES if n in plan], (name, plan)
+
+
+def test_synth_corpus_driver_literal_up_to_threshold(spark):
+    """Up to ``DRIVER_CONVS`` conversations the corpus is a driver literal;
+    above it, or with explicit ``partitions``, it is generated on
+    executors, with the same rows in the same order."""
+    from sopspark.kg.synth import DRIVER_CONVS, synth_corpus
+    from sopspark.session import is_local
+
+    transcripts, expected = synth_corpus(spark, DRIVER_CONVS, seed=5)
+    assert is_local(transcripts) and is_local(expected)
+    assert not is_local(synth_corpus(spark, DRIVER_CONVS + 1, seed=5)[0])
+
+    small = synth_corpus(spark, 30, seed=5)
+    spread = synth_corpus(spark, 30, seed=5, partitions=3)
+    assert not is_local(spread[0]) and "MapInPandas" in _physical(spread[0])
+    for local, dist in zip(small, spread):
+        assert local.toArrow().equals(dist.toArrow())

@@ -30,3 +30,16 @@ def test_operator_plans_capture_no_call_site(spark, monkeypatch):
     assert collect_nq_lines(out) == [
         "<http://example.org/o> <http://example.org/p> <http://example.org/s> ."
     ]
+
+
+def test_case_mapping_matches_python(spark):
+    """With ICU case mapping off, Spark's ``lower``/``upper`` equal Python's
+    ``str.lower``/``upper``: final sigma, dotted capital I, sharp s, a
+    titlecase digraph, the Kelvin sign, ligatures and non-BMP letters."""
+    from sopspark.session import local_df
+
+    assert spark.conf.get("spark.sql.icu.caseMappings.enabled") == "false"
+    samples = ["ΟΔΟΣ", "Σ", "İstanbul", "straße", "ǅemal", "\u212a", "ﬃ", "ŉ", "𐐀𐐨", "𝐀bc", "Ünïcödé"]
+    df = local_df(spark, [(s,) for s in samples], "t string")
+    got = [(r.t, r.lo, r.up) for r in df.selectExpr("t", "lower(t) AS lo", "upper(t) AS up").collect()]
+    assert got == [(s, s.lower(), s.upper()) for s in samples]
