@@ -129,35 +129,40 @@ def materialize_graph(
 
 def merge_incremental(existing: DataFrame, new: DataFrame, keys=("s", "p", "o")) -> DataFrame:
     """Idempotently merge a new batch of materialized triples into an
-    existing graph table: ``existing ∪ (new ⟕̸ existing)`` via a left-anti
-    join on the triple key. Running the KG pipeline per transcript batch
-    and merging with this operator yields exactly the one-shot result
-    (the sameAs equivalence source is batch-independent), which is the
-    resumable / incremental ingestion mode the north_star's checkpointed
-    pipeline needs — re-delivered batches are absorbed with no duplicates.
+    existing graph table: one row per key, ``existing``'s where both have
+    it (duplicate keys collapse and NULL key parts group together, as in
+    ``dropDuplicates``), in ``existing``'s columns. Running the KG pipeline
+    per transcript batch and merging with this operator yields exactly the
+    one-shot result (the sameAs equivalence source is batch-independent) —
+    re-delivered batches are absorbed with no duplicates.
 
-    Scale: one shuffle on the triple key for the anti join (or zero if
-    ``existing``'s key projection is broadcastable); at 100 TB the
-    production form is Iceberg ``MERGE INTO`` on the same key — this is
-    the engine-level equivalent with identical semantics.
+    Scale: ONE shuffle on the key: rows are tagged ``existing`` 0 / ``new``
+    1 and each key keeps its lowest-tag row (``min_by`` over the other
+    columns, ``distinct`` when there are none). At 100 TB the production
+    form is Iceberg ``MERGE INTO`` on the same key.
     """
     ks = list(keys)
-    add = new.join(existing.select(*ks).dropDuplicates(ks), on=ks, how="left_anti")
-    return existing.unionByName(add.select(*existing.columns)).dropDuplicates(ks)
+    rest = [c for c in existing.columns if c not in ks]
+    if not rest:
+        return existing.unionByName(new.select(*ks)).distinct()
+    tagged = existing.withColumn("_tag", F.lit(0)).unionByName(
+        new.select(*existing.columns).withColumn("_tag", F.lit(1))
+    )
+    won = tagged.groupBy(*ks).agg(F.min_by(F.struct(*rest), "_tag").alias("_row"))
+    return won.select(*[c if c in ks else F.col("_row").getField(c).alias(c) for c in existing.columns])
 
 
-def write_graph_table(
-    quads: DataFrame, path: str, partitions: int = 32
-) -> None:
+def write_graph_table(quads: DataFrame, path: str, partitions: int | None = None) -> None:
     """Materialize the graph table in the subject-pruning layout: range-
     partitioned on the subject's lexical key and sorted by (s, p) within
     each file. Parquet then records tight min/max footer stats per file /
     row group, so a subject lookup (the dominant KG access pattern) prunes
     to one file before any row is read — the flat-layout equivalent of an
-    Iceberg sort order. One range exchange; the sort is file-local."""
-    (
-        quads.repartitionByRange(partitions, F.col("s.value"))
-        .sortWithinPartitions(F.col("s.value"), F.col("p.value"))
-        .write.mode("overwrite")
-        .parquet(path)
-    )
+    Iceberg sort order. One range exchange; the sort is file-local.
+
+    Scale: ``partitions=None`` leaves the range count to AQE, which merges
+    adjacent ranges up to its advisory size (a few thousand quads: one
+    file); an explicit ``partitions`` fixes the file count."""
+    s = F.col("s.value")
+    ranged = quads.repartitionByRange(s) if partitions is None else quads.repartitionByRange(partitions, s)
+    ranged.sortWithinPartitions(s, F.col("p.value")).write.mode("overwrite").parquet(path)

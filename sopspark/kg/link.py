@@ -8,12 +8,12 @@ Design for scale:
     hash join: the mention side never shuffles for the join, so the hot
     alias ("Bob" ≈ 10% of all mentions by construction) is harmless here —
     every partition joins locally against the broadcast map.
-  * candidate scoring / argmax runs as ONE hash aggregate keyed by the
-    mention *occurrence* (conv_id, turn_idx, m_id, p) — occurrence keys are
-    unique, so the aggregate has no skew and partial (map-side) aggregation
-    collapses nearly everything before the exchange. The deterministic
-    argmax is ``min_by(candidate, struct(-prior, candidate))`` — highest
-    prior, ties to the lexicographically smallest IRI.
+  * prior scoring is a function of the alias alone, so its argmax runs on
+    the driver over the collected dictionary (:func:`best_candidates`).
+    Per-mention scoring (``context_scoring=True``) runs it as ONE aggregate
+    keyed by the mention *occurrence* (conv_id, turn_idx, m_id, p) —
+    occurrence keys are unique, so the aggregate has no skew. Both pick the
+    highest prior, ties to the lexicographically smallest IRI, NULLs last.
   * truly skewed per-entity aggregations (entity mention histograms, where
     "Bob" is one giant key) go through :func:`salted_agg_count` — the
     two-phase salted aggregate — with AQE skew handling as backstop.
@@ -26,40 +26,27 @@ from pyspark.sql import functions as F
 
 
 def _argmax(value: str, prior: str) -> Column:
-    return F.min_by(value, F.struct((-F.col(prior)).alias("np"), F.col(value).alias("v")))
+    # highest prior, ties to the smallest value, NULLs last: a struct ranks
+    # a NULL field first, so a NULL check leads each field
+    return F.min_by(value, F.struct(F.isnull(prior), -F.col(prior), F.isnull(value), F.col(value)))
 
 
 def best_candidates(alias_dict: DataFrame) -> DataFrame:
     """Fold argmax scoring into the *dictionary* side: one row per
-    (alias, etype) carrying the winning IRI. The dictionary is tiny, so this
-    aggregate is driver-scale — and it removes any shuffle of the mention
-    table from linking entirely (the scalable-plan move: aggregate the small
-    side, broadcast the result).
+    (alias, etype) carrying the winning IRI (highest prior, ties to the
+    smallest IRI, a NULL prior or IRI last). The dictionary is collected in
+    one Arrow collect, the argmax runs on the driver and the result is a
+    driver literal — the driver already holds it for the broadcast joins."""
+    from sopspark.session import local_df
 
-    When the dictionary is a driver literal (createDataFrame →
-    LocalRelation), the argmax runs on the driver with no cluster job and
-    the result stays a LocalRelation, so the downstream broadcast builds
-    are array copies instead of scheduled stages — the small fixed jobs
-    that otherwise sit in the serial fraction of the scaling ratio. A
-    dictionary read from a real table takes the distributed aggregate."""
-    from sopspark.session import is_local, local_df
-
-    if is_local(alias_dict):
-        rows = alias_dict.select("alias", "etype", "iri", "prior").collect()
-        best: dict = {}
-        for r in rows:
-            key = (r["alias"], r["etype"])
-            # NULL prior = worst (loses to any real prior) — keeps the
-            # local path total-ordered instead of crashing on float(None)
-            prior = float(r["prior"]) if r["prior"] is not None else float("-inf")
-            cand = (-prior, r["iri"])  # highest prior, ties → min IRI
-            if key not in best or cand < best[key]:
-                best[key] = cand
-        out = [(a, e, c[1]) for (a, e), c in best.items()]
-        return local_df(
-            alias_dict.sparkSession, out, "alias string, etype string, iri string"
-        )
-    return alias_dict.groupBy("alias", "etype").agg(_argmax("iri", "prior").alias("iri"))
+    cols = alias_dict.select("alias", "etype", "iri", "prior").toArrow().to_pydict()
+    best: dict = {}
+    for a, e, iri, prior in zip(cols["alias"], cols["etype"], cols["iri"], cols["prior"]):
+        rank = (prior is None, -prior if prior is not None else 0.0, iri is None, iri or "")
+        if (a, e) not in best or rank < best[(a, e)][0]:
+            best[(a, e)] = (rank, iri)
+    out = [(a, e, iri) for (a, e), (_, iri) in best.items()]
+    return local_df(alias_dict.sparkSession, out, "alias string, etype string, iri string")
 
 
 def link_entities(
@@ -110,19 +97,11 @@ def link_entities(
 
 def _link_context(mentions: DataFrame, alias_dict: DataFrame) -> DataFrame:
     person = F.broadcast(
-        alias_dict.where(F.col("etype") == "person").select(
-            F.col("alias").alias("s_alias"),
-            F.col("iri").alias("s_cand"),
-            F.col("prior").alias("s_prior"),
-        )
+        alias_dict.where("etype = 'person'")
+        .selectExpr("alias AS s_alias", "iri AS s_cand", "prior AS s_prior")
     )
     objects = F.broadcast(
-        alias_dict.select(
-            F.col("alias").alias("o_alias"),
-            F.col("etype").alias("o_etype"),
-            F.col("iri").alias("o_cand"),
-            F.col("prior").alias("o_prior"),
-        )
+        alias_dict.selectExpr("alias AS o_alias", "etype AS o_etype", "iri AS o_cand", "prior AS o_prior")
     )
     joined = mentions.join(person, on="s_alias", how="inner").join(
         objects, on=["o_alias", "o_etype"], how="left"
@@ -135,7 +114,7 @@ def _link_context(mentions: DataFrame, alias_dict: DataFrame) -> DataFrame:
             F.first("o_lit", ignorenulls=True).alias("o_lit"),
             F.first("o_etype", ignorenulls=True).alias("o_etype"),
         )
-        .where(F.col("o_etype").isNull() | F.col("o_iri").isNotNull())
+        .where("o_etype IS NULL OR o_iri IS NOT NULL")
         .select("conv_id", "turn_idx", "s", "p", "o_iri", "o_lit")
     )
 

@@ -5,8 +5,8 @@ north_rule: "resumable from checkpoint with per-partition lineage + metrics".
 Every stage materializes its output as parquet under ``workdir/<stage>/``
 next to a ``_lineage.json`` manifest recording:
   * the stage's config hash (stage code identity + parameters),
-  * the manifest hashes of its inputs (so a changed upstream invalidates
-    downstream),
+  * the manifest hashes of its stage inputs and the fingerprints of its
+    source inputs (so a changed upstream or source invalidates downstream),
   * row count, per-file row counts (parquet footer metadata — the sandbox
     stand-in for Iceberg snapshot properties), wall time, engine version,
   * the output schema (``StructType.jsonValue()``).
@@ -36,6 +36,7 @@ import os
 import time
 from dataclasses import dataclass, field
 from typing import Callable
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -156,6 +157,18 @@ def _file_row_counts(data_dir: str) -> dict[str, int]:
     return counts
 
 
+def _fingerprint(df: DataFrame) -> str:
+    """A source's identity, found without a job: its files' paths, sizes
+    and mtimes (only ``file:`` paths are stat'ed), or the plan's
+    ``semanticHash`` when it has no files (a driver literal, a range)."""
+    files = sorted(df.inputFiles())
+    if not files:
+        return f"plan:{df.semanticHash()}"
+    stats = [os.stat(unquote(urlparse(f).path)) if f.startswith("file:") else None for f in files]
+    parts = [f"{f}:{st.st_size}:{st.st_mtime_ns}" if st else f for f, st in zip(files, stats)]
+    return hashlib.sha256("\n".join(parts).encode()).hexdigest()[:16]
+
+
 def run_pipeline(
     spark: SparkSession,
     workdir: str,
@@ -164,10 +177,12 @@ def run_pipeline(
     force: bool = False,
 ) -> dict[str, DataFrame]:
     """Execute stages in order with checkpoint/resume. Returns a dict of
-    stage name → (materialized) DataFrame."""
+    stage name → (materialized) DataFrame. A manifest written before
+    sources were fingerprinted records each as ``"source"``, so a stage
+    reading a source recomputes once."""
     os.makedirs(workdir, exist_ok=True)
     results: dict[str, DataFrame] = dict(sources)
-    manifests: dict[str, str] = {}
+    manifests = {name: _fingerprint(df) for name, df in sources.items()}
 
     for st in stages:
         snaps = snapshots(workdir, st.name)
@@ -176,7 +191,7 @@ def run_pipeline(
         cur_rel = snaps[-1]["path"] if snaps else "data"
         data_dir = os.path.join(workdir, st.name, cur_rel)
         cfg = st.config_hash()
-        input_sig = {d: manifests.get(d, "source") for d in st.deps}
+        input_sig = {d: manifests[d] for d in st.deps}
         prior = _load_manifest(workdir, st.name)
         if (
             not force

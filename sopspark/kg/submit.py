@@ -29,6 +29,7 @@ from __future__ import annotations
 import argparse
 import json
 import sys
+from pathlib import Path
 
 
 def main(argv: list[str] | None = None, spark=None) -> int:
@@ -39,7 +40,8 @@ def main(argv: list[str] | None = None, spark=None) -> int:
     ap.add_argument("--force", action="store_true", help="ignore checkpoints, recompute all stages")
     ap.add_argument("--master", default=None, help="Spark master; 'cluster' = leave to spark-submit")
     ap.add_argument("--synth", type=int, default=None, metavar="N_CONVS",
-                    help="generate a deterministic synthetic corpus of N conversations into --corpus first")
+                    help="generate a deterministic synthetic corpus of N conversations into --corpus "
+                    "first, unless it already holds one of that size")
     args = ap.parse_args(argv)
 
     own_session = spark is None
@@ -52,21 +54,20 @@ def main(argv: list[str] | None = None, spark=None) -> int:
         if args.synth:
             from sopspark.kg.synth import write_corpus
 
-            write_corpus(spark, args.corpus, n_convs=args.synth)
+            # a rewritten source file invalidates every checkpoint reading it
+            marker = Path(args.corpus, "_SYNTH")
+            if not marker.is_file() or marker.read_text() != str(args.synth):
+                marker.unlink(missing_ok=True)
+                write_corpus(spark, args.corpus, n_convs=args.synth)
+                marker.write_text(str(args.synth))
 
-        from sopspark.kg.pipeline import run_kg_pipeline
+        from sopspark.kg.pipeline import _load_manifest, run_kg_pipeline
 
-        results = run_kg_pipeline(
-            spark, args.corpus, args.workdir, conv_ns=args.conv_ns, force=args.force
-        )
+        run_kg_pipeline(spark, args.corpus, args.workdir, conv_ns=args.conv_ns, force=args.force)
         summary = {}
         for name in ("assemble", "extract", "link", "sameas_cc", "graph", "canonical"):
-            import os
-
-            mp = os.path.join(args.workdir, name, "_lineage.json")
-            if os.path.exists(mp):
-                with open(mp) as f:
-                    m = json.load(f)
+            m = _load_manifest(args.workdir, name)
+            if m:
                 summary[name] = {"rows": m["rows"], "wall_sec": m["wall_sec"], "files": len(m["files"])}
         print(json.dumps({"stages": summary, "workdir": args.workdir}))
         return 0

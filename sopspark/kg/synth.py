@@ -296,9 +296,8 @@ def synth_corpus(
 
 
 def alias_df(spark: SparkSession) -> DataFrame:
-    # Arrow-built LocalRelation, not createDataFrame over rows (RDD): the
-    # linking broadcast builds over it then run without cluster jobs —
-    # keeps the tiny-dictionary preamble out of the serial fraction
+    # Arrow-built LocalRelation, not createDataFrame over rows (RDD):
+    # collecting it for the linking argmax is a driver-side copy
     from sopspark.session import local_df
 
     return local_df(

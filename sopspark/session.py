@@ -77,13 +77,13 @@ def local_df(spark: SparkSession, rows: list[tuple], schema: str):
     """Driver-literal DataFrame built from an Arrow table.
 
     Unlike ``createDataFrame`` over Python rows (which parallelizes them
-    into an RDD, so every collect/broadcast over it schedules a cluster
-    job), an Arrow table optimizes to a ``LocalRelation``: collects are
-    driver-side array copies and broadcast-hash-join builds skip the job
-    entirely. Use for small dimension/dictionary literals and for the
-    output of driver-side plans; NOT for data that should live on
-    executors. Building it costs ~0.7 s for 100k rows (a SQL ``VALUES``
-    string took ~8 s).
+    into an RDD that every action scans), an Arrow table optimizes to a
+    ``LocalRelation``: collects are driver-side array copies, and the plan
+    has no scan. A broadcast-hash-join build over it still schedules a
+    job. Use for small dimension/dictionary literals and for the output of
+    driver-side plans; NOT for data that should live on executors.
+    Building it costs ~0.7 s for 100k rows (a SQL ``VALUES`` string took
+    ~8 s).
 
     ``schema`` is a DDL string like ``"alias string, prior double"``; each
     column is built as an Arrow array of exactly the declared type, so

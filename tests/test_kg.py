@@ -307,6 +307,28 @@ def test_pipeline_checkpoint_rereads_schedule_no_job(spark, tmp_path):
     assert legacy["b"].schema == first["b"].schema
 
 
+def test_pipeline_rewritten_source_recomputes(spark, tmp_path):
+    """A source is fingerprinted by its files (path, size, mtime): a
+    rewritten source recomputes the stage that reads it, an unchanged one
+    resumes with no job."""
+    from sopspark.kg.pipeline import Stage, run_pipeline
+
+    src, wd = str(tmp_path / "src"), str(tmp_path / "wd")
+    stages = [Stage("copy", lambda spark_, inputs: inputs["src"], deps=["src"])]
+
+    def run(n):
+        read = spark.read.schema("id long").parquet(src)
+        out, jobs = _jobs(spark, f"pipeline-source-{n}", lambda: run_pipeline(spark, wd, stages, {"src": read}))
+        return sorted(r.id for r in out["copy"].collect()), jobs
+
+    spark.range(3).write.parquet(src)
+    assert run(1) == ([0, 1, 2], 1)
+    assert run(2) == ([0, 1, 2], 0)
+    spark.range(5).write.mode("overwrite").parquet(src)
+    assert run(3) == ([0, 1, 2, 3, 4], 1)
+    assert run(4) == ([0, 1, 2, 3, 4], 0)
+
+
 def test_snapshot_time_travel_and_expire(spark, tmp_path):
     """Every re-materialization appends a snapshot: time travel reads old
     versions (with the schema each entry records, or by inference for an
@@ -412,6 +434,125 @@ def test_write_graph_table_subject_pruning_layout(spark, tmp_path):
     # consecutive files' subject ranges must not interleave
     for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
         assert hi1 <= lo2, (hi1, lo2)
+
+
+def test_write_graph_table_default_is_one_file_for_a_small_table(spark, tmp_path):
+    """Without ``partitions`` AQE merges adjacent subject ranges: a table
+    of a few thousand quads is one file, sorted by subject."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from sopspark.kg.canon import write_graph_table
+
+    transcripts, _ = synth_corpus(spark, n_convs=300, seed=42)
+    quads = materialize_graph(
+        link_entities(extract_triples(assemble_turns(transcripts)), alias_df(spark)),
+        sameas_closure(sameas_df(spark)),
+        conv_ns="http://example.org/conv/",
+    )
+    out = str(tmp_path / "graph")
+    write_graph_table(quads, out)
+    files = glob.glob(out + "/part-*.parquet")
+    assert len(files) == 1
+    subjects = [r["value"] for r in pq.read_table(files[0], columns=["s"]).column("s").to_pylist()]
+    assert len(subjects) == quads.count() > 1000
+    assert subjects == sorted(subjects)
+
+
+DICT_SCHEMA = "alias string, iri string, prior double, etype string"
+DICT_ROWS = [
+    ("x", "a", None, "person"), ("x", "b", 0.5, "person"),  # a NULL prior loses
+    ("y", None, 0.7, "person"), ("y", "c", 0.7, "person"),  # a tie: the NULL IRI loses
+    ("z", "e", 0.2, "city"), ("z", "d", 0.2, "city"), ("z", "f", None, "city"),
+    ("z", "g", 0.9, "person"),  # another etype: its own argmax
+]
+
+
+def _dictionary(spark, tmp_path, source):
+    from sopspark.session import local_df
+
+    d = local_df(spark, DICT_ROWS, DICT_SCHEMA)
+    if source == "literal":
+        return d
+    d.write.parquet(str(tmp_path / "dict"))
+    return spark.read.schema(DICT_SCHEMA).parquet(str(tmp_path / "dict"))
+
+
+@pytest.mark.parametrize("source", ["parquet", "literal"])
+def test_best_candidates_matches_oracle_order(spark, tmp_path, source):
+    """The driver argmax picks what the oracle's ``ORDER BY prior DESC,
+    iri ASC`` ranks first: NULL priors and NULL IRIs last."""
+    import duckdb
+
+    from sopspark.kg.link import best_candidates
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE al (alias VARCHAR, iri VARCHAR, prior DOUBLE, etype VARCHAR)")
+    con.executemany("INSERT INTO al VALUES (?, ?, ?, ?)", DICT_ROWS)
+    want = con.execute(
+        "SELECT alias, etype, iri FROM (SELECT alias, etype, iri, ROW_NUMBER() OVER "
+        "(PARTITION BY alias, etype ORDER BY prior DESC, iri ASC) AS rk FROM al) WHERE rk = 1"
+    ).fetchall()
+    got = [tuple(r) for r in best_candidates(_dictionary(spark, tmp_path, source)).collect()]
+    assert sorted(got) == sorted(want) == [("x", "person", "b"), ("y", "person", "c"),
+                                           ("z", "city", "d"), ("z", "person", "g")]
+
+
+@pytest.mark.parametrize("context_scoring", [False, True])
+@pytest.mark.parametrize("source", ["parquet", "literal"])
+def test_link_argmax_nulls_last(spark, tmp_path, source, context_scoring):
+    """Both linking plans, over a parquet and a driver-literal dictionary,
+    rank a NULL prior and a NULL IRI last."""
+    from sopspark.kg.extract import MENTION_SCHEMA
+    from sopspark.session import local_df
+
+    mentions = local_df(
+        spark,
+        [("c1", 0, 0, "x", LIVES_IN, "z", None, "city"), ("c1", 1, 4096, "y", AGE, None, "42", None)],
+        MENTION_SCHEMA,
+    )
+    linked = link_entities(mentions, _dictionary(spark, tmp_path, source), context_scoring)
+    assert sorted(tuple(r) for r in linked.collect()) == [
+        ("c1", 0, "b", LIVES_IN, "d", None),
+        ("c1", 1, "c", AGE, None, "42"),
+    ]
+
+
+def test_merge_incremental_semantics(spark):
+    """One row per key, ``existing``'s where both inputs have it; duplicate
+    keys in either input collapse; NULL key parts group together; columns
+    keep ``existing``'s order; a re-delivered batch changes nothing."""
+    from sopspark.kg.canon import merge_incremental
+    from sopspark.session import local_df
+
+    schema = "s string, p string, o string, src string"
+    existing = local_df(
+        spark,
+        [("a", "p", "1", "old1"), ("a", "p", "1", "old2"), ("n", None, "1", "old")],
+        schema,
+    )
+    new = local_df(
+        spark,
+        [("a", "p", "1", "new"), ("n", None, "1", "new"), ("c", "p", "3", "new"),
+         ("c", "p", "3", "new"), (None, None, None, "new"), (None, None, None, "new")],
+        schema,
+    )
+    rows = lambda df: sorted((tuple(r) for r in df.collect()), key=str)  # noqa: E731
+    merged = merge_incremental(existing, new)
+    assert merged.columns == existing.columns
+    got = rows(merged)
+    assert len(got) == 4
+    assert [r for r in got if r[0] == "a"] in ([("a", "p", "1", "old1")], [("a", "p", "1", "old2")])
+    assert [r for r in got if r[0] != "a"] == rows(
+        local_df(spark, [("c", "p", "3", "new"), ("n", None, "1", "old"), (None, None, None, "new")], schema)
+    )
+    assert rows(merge_incremental(merged, new)) == got
+
+    # the key is every column, in an order other than existing's
+    flipped = merge_incremental(existing.select("src", "o", "s", "p"), new, keys=("s", "p", "o", "src"))
+    assert flipped.columns == ["src", "o", "s", "p"]
+    assert len(flipped.collect()) == 7
 
 
 def test_adamic_adar_closed_form_and_hot_center_cap(spark):

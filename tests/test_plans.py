@@ -111,6 +111,49 @@ def test_kg_linking_no_shuffle_joins(spark):
     assert "BroadcastHashJoin" in phys or "BroadcastNestedLoopJoin" in phys
 
 
+def test_kg_linking_parquet_dictionary_one_collect(spark, tmp_path):
+    """Over a dictionary read from parquet, the alias argmax is one driver
+    collect: the linking plan has no hash exchange, and linking plus a
+    parquet write of its output schedule at most 4 jobs (the collect, two
+    broadcast builds, the write)."""
+    from sopspark.kg.extract import assemble_turns, extract_triples
+    from sopspark.kg.link import link_entities
+    from sopspark.kg.synth import alias_df, synth_corpus
+
+    transcripts, _ = synth_corpus(spark, n_convs=50, seed=42)
+    extract_triples(assemble_turns(transcripts)).write.parquet(str(tmp_path / "mentions"))
+    alias_df(spark).write.parquet(str(tmp_path / "dict"))
+    mentions = spark.read.parquet(str(tmp_path / "mentions"))
+    alias_dict = spark.read.parquet(str(tmp_path / "dict"))
+
+    def run():
+        linked = link_entities(mentions, alias_dict)
+        plan = _physical(linked)
+        linked.write.parquet(str(tmp_path / "linked"))
+        return plan
+
+    plan, jobs = _jobs(spark, f"link_{tmp_path.name}", run)
+    assert "Exchange hashpartitioning" not in plan, plan
+    assert jobs <= 4, jobs
+
+
+@pytest.mark.parametrize("keys", [("s", "p", "o", "g"), ("s", "p", "o", "g", "err")])
+def test_merge_incremental_single_shuffle(spark, tmp_path, keys):
+    """The incremental merge is one shuffle on the key, with or without
+    non-key columns, and broadcasts nothing."""
+    from sopspark.kg.canon import merge_incremental
+
+    graph = spark.range(50).selectExpr(
+        *[f"named_struct('kind', 1, 'value', concat('{c}', id % 7)) AS {c}" for c in "spog"],
+        "CAST(NULL AS STRING) AS err",
+    )
+    graph.write.parquet(str(tmp_path / "v0"))
+    existing = spark.read.parquet(str(tmp_path / "v0"))
+    merged = merge_incremental(existing, graph, keys=keys)
+    plan = _physical(merged)
+    assert _n_exchanges(plan) == 1 and "BroadcastExchange" not in plan, plan
+
+
 def test_gopher_quality_map_only(spark):
     from sopspark.text.analysis import gopher_quality
 
